@@ -5,7 +5,9 @@ reference's index cache, src/hdt.rs:110-193): each stage writes its output
 table to ``<warehouse>/<stage>/data`` (parquet; an Iceberg catalog slots in
 behind the same call sites when its runtime jar is present — none is in this
 sandbox), then atomically records a ``_manifest.json`` with the stage's
-input fingerprint, row count, partition lineage, and wall time.
+input fingerprint, row count, output schema, partition lineage, and wall
+time.  Reads use the recorded schema, so serving a stage launches no
+schema-inference job.
 
 Resume semantics (north rule): a rerun recomputes a stage only if its
 manifest is missing or its input fingerprint changed; otherwise the stage is
@@ -86,11 +88,21 @@ class Materializer:
             return None
 
     def read_table(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._dir(stage), "data"))
+        """The stage's parquet output, read with the schema its manifest
+        records (no inference job)."""
+        m = self.read_manifest(stage)
+        if not m or "schema" not in m:
+            raise FileNotFoundError(
+                f"stage {stage!r} of {self.warehouse} has no complete "
+                "manifest with a schema; rerun the build")
+        return (self.spark.read.schema(m["schema"])
+                .parquet(os.path.join(self._dir(stage), "data")))
 
     def stage_complete(self, stage: str, input_fp: str) -> bool:
+        """A manifest without a schema (older layout) is incomplete, so the
+        stage rebuilds once."""
         m = self.read_manifest(stage)
-        return bool(m and m.get("status") == "complete"
+        return bool(m and m.get("status") == "complete" and "schema" in m
                     and m.get("input_fingerprint") == input_fp)
 
     def write_stage(self, stage: str, df: DataFrame, input_fp: str,
@@ -142,12 +154,13 @@ class Materializer:
             "input_fingerprint": input_fp,
             "content_fingerprint": content_fp,
             "rows_out": rows,
+            "schema": df.schema.toDDL(),
             "wall_ms": wall_ms,
             "partitions": lineage,
             **(extra or {}),
         }
         with open(os.path.join(tmp, MANIFEST), "w") as f:
-            json.dump(manifest, f)
+            json.dump(manifest, f, separators=(",", ":"))
         shutil.rmtree(d, ignore_errors=True)
         os.rename(tmp, d)
         res = StageResult(stage, False, rows, wall_ms)

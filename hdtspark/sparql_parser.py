@@ -84,13 +84,17 @@ def _tokenize(q: str) -> list[tuple[str, str]]:
 @dataclass(frozen=True)
 class PlusPath:
     """One-or-more closure (property path ``p+``), kept symbolic in the
-    pattern list; the evaluator runs a distributed semi-naive transitive
-    closure for it (_closure_pairs_ids).  A single (optionally inverted)
-    IRI sets ``iri`` and iterates on 8-byte IDs; a COMPOSITE inner path
-    (e.g. ``(a/b)+``) sets ``node`` (the path AST) instead — its edge
-    relation is built once through the ID-level BGP compiler and the
-    iteration runs on the translated string pairs (composite endpoints
-    span ID spaces, so strings are the sound common denominator)."""
+    pattern list.  A single (optionally inverted) IRI sets ``iri``; a
+    COMPOSITE inner path (e.g. ``(a/b)+``) sets ``node`` (the path AST)
+    instead.  Either way the evaluator states the edge relation on 8-byte
+    ids (PSO per-role ids, or global node ids for a composite built
+    through the ID-level BGP compiler) and closes it with ONE distributed
+    semi-naive loop (``closure``): each step joins only the newest
+    generation with the edges and runs exactly one Spark action, and the
+    anti-join against the accumulated generations broadcasts them while
+    their exact size fits Spark's broadcast threshold, so the step's only
+    shuffle is the frontier's dedup.  Terms are translated once, at the
+    end."""
 
     iri: str | None = None
     node: tuple | None = None
@@ -995,133 +999,119 @@ def parse(q: str) -> Query:
     return _Parser(q).parse()
 
 
-# Per-step iteration cap for `p+`/`p*` closures — cycle-safe upper bound on
-# graph diameter.  Read at CALL time (not bound as a default), so a caller
-# facing a deeper-than-64 graph can raise it per query:
+# Step cap for `p+`/`p*` closures: a cycle-safe upper bound on the graph's
+# diameter (a chain of exactly CLOSURE_MAX_ITERS edges closes, one more edge
+# raises).  Read at CALL time, not bound as a default, so a caller facing a
+# deeper graph can raise it per query:
 #     sparql_parser.CLOSURE_MAX_ITERS = 256
 CLOSURE_MAX_ITERS = 64
 
-
-def _pred_id(kg: KG, iri: str) -> int | None:
-    """Predicate term -> id (one point-filter job); None if absent."""
-    from pyspark.sql import functions as F
-
-    rows = kg.dict.predicates.filter(F.col("term") == iri).select("id").collect()
-    return rows[0]["id"] if rows else None
+# Bytes per accumulator column in the broadcast size estimate: every
+# closure iterates on 8-byte ids.
+_ID_BYTES = 8
 
 
 def _closure_base_ids(kg: KG, pid: int) -> DataFrame:
     """Edge relation of predicate ``pid`` as ID pairs from the PSO
     projection: (a = subject-space id, b = object-space id).  The pruned
     p-filter scan is the same route as Q6 (?P?); no strings anywhere."""
-    from pyspark.sql import functions as F
-
     return kg.pso.filter(F.col("p") == pid).select(
         F.col("s").alias("a"), F.col("o").alias("b"))
 
 
-def closure_step_ids(frontier: DataFrame, base: DataFrame, n_shared: int,
-                     carry_a: bool) -> DataFrame:
-    """One semi-naive expansion step, entirely on 8-byte IDs (the plan the
-    100x design depends on — locked in tests/test_plans.py).
+def closure_step(frontier: DataFrame, base: DataFrame, acc: DataFrame,
+                 acc_rows: int, n_shared: int | None = None) -> DataFrame:
+    """One semi-naive step on 8-byte ids: walk one ``base`` edge from each
+    frontier row's node ``b``, dedup, and drop what the accumulator ``acc``
+    (``acc_rows`` rows) already holds.  The frontier is (a, b) origin/node
+    pairs (full closure) or a bare node column ``b`` (seeded walk); the
+    result has the frontier's columns.  The plan is locked in
+    tests/test_plans.py.
 
-    A walk continues from a frontier node's OBJECT id through an edge whose
-    SUBJECT id equals it numerically — valid only in the shared section
-    (subject and object ids collide numerically above ``n_shared``; a term
-    occurring as both subject and object is by construction shared, with one
-    id).  Both sides carry the ``<= n_shared`` guard: non-shared object ids
-    are dead ends (correct — they have no outgoing edges) and the guard
-    prevents FALSE numeric matches against non-shared subject ids.
+    ``acc`` is a union of checkpointed generations, which carry no size
+    statistics, so Spark would plan a sort-merge anti-join that re-shuffles
+    the whole accumulator every step.  Its exact size is known here: while
+    ``acc_rows`` x row width fits ``spark.sql.autoBroadcastJoinThreshold``
+    the anti-join broadcasts it, and the frontier dedup is the step's only
+    exchange.  Above the threshold (or at -1) Spark plans as it would.
 
-    ``carry_a``: keep the frontier's origin column ``a`` (full closure);
-    otherwise the frontier is a bare reachable-set column ``b`` (BFS)."""
-    from pyspark.sql import functions as F
+    ``n_shared`` guards per-role ids: a walk continues from an object-space
+    id through a subject-space id of equal value only in the shared section
+    (ids collide numerically above ``n_shared``; a term occurring as both
+    subject and object is shared, with one id).  Global node ids need no
+    guard (None)."""
+    f, e = frontier, base
+    if n_shared is not None:
+        f = f.filter(F.col("b") <= n_shared)
+        e = e.filter(F.col("a") <= n_shared)
+    carry = ["a"] if "a" in frontier.columns else []
+    new = (f.select(*[F.col(c).alias("_fa") for c in carry],
+                    F.col("b").alias("_n"))
+           .join(e, F.col("_n") == F.col("a"))
+           .select(*[F.col("_fa").alias(c) for c in carry], "b").distinct())
+    threshold = (acc.sparkSession._jsparkSession.sessionState().conf()
+                 .autoBroadcastJoinThreshold())
+    if 0 <= acc_rows * _ID_BYTES * len(frontier.columns) <= threshold:
+        acc = F.broadcast(acc)
+    return new.join(acc, frontier.columns, "left_anti")
 
-    f = frontier.filter(F.col("b") <= n_shared)
-    bb = base.filter(F.col("a") <= n_shared)
-    if carry_a:
-        return (f.select(F.col("a").alias("_fa"), F.col("b").alias("_n"))
-                .join(bb, F.col("_n") == F.col("a"))
-                .select(F.col("_fa").alias("a"), "b").distinct())
-    return (f.select(F.col("b").alias("_n"))
-            .join(bb, F.col("_n") == F.col("a"))
-            .select("b").distinct())
 
+def closure(base: DataFrame, seed: int | None = None, backward: bool = False,
+            n_shared: int | None = None) -> DataFrame:
+    """The one-or-more transitive closure of the id edge relation ``base``
+    (a, b) — the single semi-naive loop behind every ``p+``/``p*``/
+    ``(path)+`` evaluation.
 
-def _closure_pairs_ids(kg: KG, pid: int | None, seed_id: int | None = None,
-                       seed_on_a: bool = True, seeded: bool = False,
-                       max_iters: int | None = None) -> DataFrame:
-    """One-or-more transitive closure of predicate ``pid`` at the ID level
-    (VERDICT r4 next #2 — r3/r4 iterated on canonical-string pairs, paying
-    ~10x-wider shuffle rows per step than the 8-byte ids need).
+    Unseeded -> all (a, b) pairs.  Seeded -> the set of nodes reachable from
+    ``seed`` as one column ``b`` (a BFS whose frontier stays result-sized);
+    ``backward`` walks the edges in reverse, so ``b`` then holds the nodes
+    that reach ``seed``.  ``n_shared``: see ``closure_step``.
 
-    Distributed semi-naive iteration: per step ONE equi-join of the FRONTIER
-    (not the accumulated set) with the base edge relation plus a left-anti
-    dedup against the accumulator, so the per-step shuffle is
-    frontier-sized.  Unseeded -> all (a, b) pairs (a subject-space, b
-    object-space).  Seeded -> the reachable set as a single column (``b``
-    object-space ids forward, ``a`` subject-space ids backward) — a BFS
-    whose frontier stays result-sized (the reference's pruned-walk analog;
-    full closure without a bound endpoint is inherently output-sized and the
-    caller should bound it).  Terminates when the frontier empties; raises
-    after ``max_iters`` steps (cycle-safe: the anti-join shrinks or stops).
+    Generation 0 is the edge set (or the seed's out-edges); each step derives
+    the next generation from the last one only (``closure_step``).  A step
+    is exactly ONE Spark action: an eager ``localCheckpoint`` of the new
+    generation, whose row count rides the same job through ``df.observe``.
+    The accumulator is the union of the checkpointed generations; each is a
+    plan leaf, so the plan grows linearly rather than doubling, and the
+    observed counts size the accumulator for ``closure_step``'s broadcast
+    rule.  Checkpointed blocks are reclaimed by the ContextCleaner once the
+    returned DataFrame is garbage-collected (on a cluster a reliable
+    checkpoint dir would replace localCheckpoint for executor-loss
+    tolerance).  The loop ends when a generation is empty (cycle-safe: the
+    anti-join never re-derives a known row) and raises, naming the step and
+    the observed row counts, once generation ``CLOSURE_MAX_ITERS`` is still
+    not."""
+    from pyspark.sql import Observation
 
-    localCheckpoint (not persist): iterative plans otherwise DOUBLE their
-    lineage tree each step, exploding plan compilation exponentially.  The
-    checkpoint pins materialized blocks and truncates the plan to them;
-    superseded blocks are NOT freed eagerly — they are reclaimed by the
-    ContextCleaner once the superseded frontier/accumulator plans are
-    garbage-collected (this loop drops its references each step; on a
-    cluster a reliable checkpoint dir would replace localCheckpoint for
-    executor-loss tolerance).  Peak extra storage is bounded by a few
-    frontier generations of 16-byte rows.
-    """
-    from pyspark.sql import functions as F
-
-    if max_iters is None:
-        max_iters = CLOSURE_MAX_ITERS
-    spark = kg.spo.sparkSession
-    n_shared = kg.dict.n_shared
-
-    if seeded:
-        out_col = "b" if seed_on_a else "a"
-        if pid is None or seed_id is None:
-            return spark.createDataFrame([], f"{out_col} long")
-        base = _closure_base_ids(kg, pid)
-        if not seed_on_a:
-            # walk edges backwards: swap roles once, reuse the forward step
-            base = base.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        acc = (base.filter(F.col("a") == seed_id).select("b").distinct()
-               .localCheckpoint())
-        frontier = acc
-        for _ in range(max_iters):
-            new = (closure_step_ids(frontier, base, n_shared, carry_a=False)
-                   .join(acc, ["b"], "left_anti").localCheckpoint())
-            if new.isEmpty():
-                break
-            acc = acc.unionAll(new).localCheckpoint()
-            frontier = new
-        else:
-            raise ValueError(f"path closure exceeded {max_iters} iterations"
-                             " (raise sparql_parser.CLOSURE_MAX_ITERS)")
-        return acc.select(F.col("b").alias(out_col))
-
-    if pid is None:
-        return spark.createDataFrame([], "a long, b long")
-    base = _closure_base_ids(kg, pid)
-    acc = base.distinct().localCheckpoint()
-    frontier = acc
-    for _ in range(max_iters):
-        new = (closure_step_ids(frontier, base, n_shared, carry_a=True)
-               .join(acc, ["a", "b"], "left_anti").localCheckpoint())
-        if new.isEmpty():
+    max_iters = CLOSURE_MAX_ITERS
+    if backward:
+        base = base.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    new = (base if seed is None
+           else base.filter(F.col("a") == seed).select("b")).distinct()
+    gens: list[DataFrame] = []
+    total = 0
+    for step in range(max_iters + 1):
+        obs = Observation()
+        gen = new.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+        n = obs.get["n"]
+        if n == 0:
             break
-        acc = acc.unionAll(new).localCheckpoint()
-        frontier = new
-    else:
-        raise ValueError(f"path closure exceeded {max_iters} iterations"
-                         " (raise sparql_parser.CLOSURE_MAX_ITERS)")
-    return acc
+        gens.append(gen)
+        total += n
+        if step == max_iters:
+            raise ValueError(
+                f"path closure still growing at step {step}: last frontier "
+                f"{n} rows, {total} rows accumulated (raise "
+                f"sparql_parser.CLOSURE_MAX_ITERS, now {max_iters})")
+        new = closure_step(gen, base, _union(gens), total, n_shared)
+    return _union(gens) if gens else gen
+
+
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    out = dfs[0]
+    for df in dfs[1:]:
+        out = out.unionAll(df)
+    return out
 
 
 def _composite_pairs(kg: KG, node) -> DataFrame:
@@ -1149,10 +1139,7 @@ def _composite_pairs(kg: KG, node) -> DataFrame:
         df = bgp_mod.bgp(kg, patterns)
         parts.append(df.select(F.col("__ca").alias("a"),
                                F.col("__cb").alias("b")))
-    out = parts[0]
-    for other in parts[1:]:
-        out = out.unionAll(other)
-    return out.distinct()
+    return _union(parts).distinct()
 
 
 def _node_global_expr(col: str, space: str, n_shared: int, n_subj: int):
@@ -1209,10 +1196,7 @@ def _composite_pairs_ids(kg: KG, node) -> DataFrame:
             .alias("b")))
     if not parts:
         return spark.createDataFrame([], "a long, b long")
-    out = parts[0]
-    for other in parts[1:]:
-        out = out.unionAll(other)
-    return out.distinct()
+    return _union(parts).distinct()
 
 
 def _node_global_dict(kg: KG) -> tuple[DataFrame, int]:
@@ -1240,59 +1224,12 @@ def _translate_node_global(kg: KG, ids_df: DataFrame) -> DataFrame:
     return out.select(*[F.col(f"_t_{v}").alias(v) for v in ids_df.columns])
 
 
-def _node_global_id(kg: KG, term: str) -> int | None:
-    """Term -> global node id (one point-filter job); None if absent."""
+def _node_global_ids(kg: KG, *terms: str) -> list[int]:
+    """Terms -> global node ids in ONE point-filter job; 0 if absent."""
     nd, _ = _node_global_dict(kg)
-    rows = nd.filter(F.col("term") == term).select("id").collect()
-    return rows[0]["id"] if rows else None
-
-
-def _closure_pairs_str(kg: KG, base: DataFrame,
-                       seed: str | int | None = None,
-                       seed_on_a: bool = True,
-                       max_iters: int | None = None) -> DataFrame:
-    """Semi-naive one-or-more closure over ANY (a, b) edge relation whose
-    values are node identities — global node IDs (8-byte rows; the
-    composite-closure path, _composite_pairs_ids) or term strings (same
-    frontier / anti-join / localCheckpoint structure as
-    ``_closure_pairs_ids``; see that docstring).  Unseeded -> all pairs;
-    seeded -> the reachable set as one column."""
-    if max_iters is None:
-        max_iters = CLOSURE_MAX_ITERS
-    if seed is not None:
-        if not seed_on_a:
-            base = base.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        acc = (base.filter(F.col("a") == seed).select("b").distinct()
-               .localCheckpoint())
-        frontier = acc
-        for _ in range(max_iters):
-            new = (frontier.select(F.col("b").alias("_n"))
-                   .join(base, F.col("_n") == F.col("a"))
-                   .select("b").distinct()
-                   .join(acc, ["b"], "left_anti").localCheckpoint())
-            if new.isEmpty():
-                break
-            acc = acc.unionAll(new).localCheckpoint()
-            frontier = new
-        else:
-            raise ValueError(f"path closure exceeded {max_iters} iterations"
-                             " (raise sparql_parser.CLOSURE_MAX_ITERS)")
-        return acc
-    acc = base.distinct().localCheckpoint()
-    frontier = acc
-    for _ in range(max_iters):
-        new = (frontier.select(F.col("a").alias("_fa"), F.col("b").alias("_n"))
-               .join(base, F.col("_n") == F.col("a"))
-               .select(F.col("_fa").alias("a"), "b").distinct()
-               .join(acc, ["a", "b"], "left_anti").localCheckpoint())
-        if new.isEmpty():
-            break
-        acc = acc.unionAll(new).localCheckpoint()
-        frontier = new
-    else:
-        raise ValueError(f"path closure exceeded {max_iters} iterations"
-                         " (raise sparql_parser.CLOSURE_MAX_ITERS)")
-    return acc
+    found = {r["term"]: r["id"]
+             for r in nd.filter(F.col("term").isin(list(terms))).collect()}
+    return [found.get(t, 0) for t in terms]
 
 
 def _nodes_df(kg: KG) -> DataFrame:
@@ -1326,19 +1263,25 @@ def _zero_rel(kg: KG, s: str, o: str) -> DataFrame:
         F.col("term").alias(s[1:]))
 
 
+def _empty_rel(kg: KG, s: str, o: str) -> DataFrame:
+    """An empty relation over the pattern's var columns (string terms), in
+    the (s, o) order a non-empty one has."""
+    cols = list(dict.fromkeys(t[1:] for t in (s, o) if t.startswith("?")))
+    return kg.spo.sparkSession.createDataFrame(
+        [], ", ".join(f"`{v}` string" for v in cols))
+
+
 def _plus_rel_composite(kg: KG, s: str, node, o: str) -> DataFrame:
     """``(composite)+`` closure relation with >=1 free endpoint.
 
     The edge relation is BGP-compiled to GLOBAL node-ID pairs
-    (``_composite_pairs_ids``) and the semi-naive iteration runs on 8-byte
-    ids (global-id equality ⇔ term equality, so the per-step join needs no
-    guards); translation to term strings happens ONCE on the final
-    accumulator — the same shape as the simple-``p+`` ID closure
-    (VERDICT r5 next #4)."""
+    (``_composite_pairs_ids``; global-id equality is term equality, so the
+    loop needs no guard) and closed by ``closure``; translation to term
+    strings happens ONCE on the result."""
     base = _composite_pairs_ids(kg, node)
     s_var, o_var = s.startswith("?"), o.startswith("?")
     if s_var and o_var:
-        pairs = _closure_pairs_str(kg, base)
+        pairs = closure(base)
         if s == o:
             ids = (pairs.filter(F.col("a") == F.col("b"))
                    .select(F.col("a").alias(s[1:])))
@@ -1346,53 +1289,47 @@ def _plus_rel_composite(kg: KG, s: str, node, o: str) -> DataFrame:
         return _translate_node_global(
             kg, pairs.select(F.col("a").alias(s[1:]),
                              F.col("b").alias(o[1:])))
-    if o_var:
-        seed = _node_global_id(kg, s)
-        if seed is None:
-            return kg.spo.sparkSession.createDataFrame(
-                [], f"`{o[1:]}` string")
-        ids = _closure_pairs_str(kg, base, seed=seed, seed_on_a=True)
-        return _translate_node_global(kg, ids.select(F.col("b").alias(o[1:])))
-    seed = _node_global_id(kg, o)
-    if seed is None:
-        return kg.spo.sparkSession.createDataFrame([], f"`{s[1:]}` string")
-    ids = _closure_pairs_str(kg, base, seed=seed, seed_on_a=False)
-    return _translate_node_global(kg, ids.select(F.col("b").alias(s[1:])))
+    seed_term, out = (s, o) if o_var else (o, s)
+    (seed,) = _node_global_ids(kg, seed_term)
+    if not seed:
+        return _empty_rel(kg, s, o)
+    ids = closure(base, seed=seed, backward=not o_var)
+    return _translate_node_global(kg, ids.select(F.col("b").alias(out[1:])))
 
 
 def _plus_rel(kg: KG, s: str, iri: str, o: str) -> DataFrame:
     """The ``p+`` closure relation with >=1 free endpoint, as string-named
-    var columns.  The closure itself runs on IDs (``_closure_pairs_ids``);
-    var columns are translated to term strings ONCE here, result-sized, via
-    the same broadcast dictionary joins as the BGP compiler."""
+    var columns.  The predicate and the bound endpoint resolve in one
+    lookup job; the closure runs on per-role ids from the PSO projection
+    (``closure`` with the shared-section guard); var columns are translated
+    to term strings ONCE here, result-sized, via the same broadcast
+    dictionary joins as the BGP compiler."""
     from . import sparql as bgp_mod
     from .query import _lookup_ids
 
-    pid = _pred_id(kg, iri)
     s_var, o_var = s.startswith("?"), o.startswith("?")
+    sid, pid, oid = _lookup_ids(kg, None if s_var else s, iri,
+                                None if o_var else o)
+    if not pid or not (s_var or sid) or not (o_var or oid):
+        return _empty_rel(kg, s, o)
+    base, n_shared = _closure_base_ids(kg, pid), kg.dict.n_shared
     if s_var and o_var:
-        pairs = _closure_pairs_ids(kg, pid)
+        pairs = closure(base, n_shared=n_shared)
         if s == o:
             # same var both ends: a reflexive closure pair — ID equality is
             # term equality only in the shared section (disjoint spaces)
             ids = (pairs.filter((F.col("a") == F.col("b"))
-                                & (F.col("a") <= kg.dict.n_shared))
+                                & (F.col("a") <= n_shared))
                    .select(F.col("a").alias(s[1:])))
             return bgp_mod._translate_vars(kg, ids, {s[1:]: "shared"})
         ids = pairs.select(F.col("a").alias(s[1:]), F.col("b").alias(o[1:]))
         return bgp_mod._translate_vars(kg, ids, {s[1:]: "s", o[1:]: "o"})
-    if o_var:     # s bound: BFS forward from s (seed is a subject-space id)
-        sid, _, _ = _lookup_ids(kg, s, None, None)
-        ids = _closure_pairs_ids(kg, pid, seed_id=sid or None,
-                                 seed_on_a=True, seeded=True)
-        return bgp_mod._translate_vars(
-            kg, ids.select(F.col("b").alias(o[1:])), {o[1:]: "o"})
-    # o bound: BFS backward from o (seed is an object-space id)
-    _, _, oid = _lookup_ids(kg, None, None, o)
-    ids = _closure_pairs_ids(kg, pid, seed_id=oid or None,
-                             seed_on_a=False, seeded=True)
+    # one end bound: a BFS forward from a subject-space seed (reaching
+    # object-space ids) or backward from an object-space seed
+    seed, out, space = (sid, o, "o") if o_var else (oid, s, "s")
+    ids = closure(base, seed=seed, backward=not o_var, n_shared=n_shared)
     return bgp_mod._translate_vars(
-        kg, ids.select(F.col("a").alias(s[1:])), {s[1:]: "s"})
+        kg, ids.select(F.col("b").alias(out[1:])), {out[1:]: space})
 
 
 def _step_rel(kg: KG, s: str, iri: str, o: str) -> DataFrame:
@@ -1454,30 +1391,30 @@ def _node_exists(kg: KG, term: str) -> bool:
 
 
 def _path_hit(kg: KG, s: str, marker, o: str) -> bool:
-    """Both endpoints bound: existence test."""
+    """Both endpoints bound: existence test.  A closure resolves its
+    predicate and both endpoints in one lookup job, then runs a BFS from
+    ``s`` (``closure``) and probes its result for ``o``."""
     from .query import _lookup_ids, triples_with_pattern
 
     if isinstance(marker, (StarPath, OptPath)) and s == o:
         if _node_exists(kg, s):
             return True
-    if marker.iri is None:   # composite inner
-        if isinstance(marker, OptPath):
-            base = _composite_pairs(kg, marker.node)
-            return (base.filter((F.col("a") == s) & (F.col("b") == o))
-                    .limit(1).count()) > 0
-        sid_g, oid_g = _node_global_id(kg, s), _node_global_id(kg, o)
-        if sid_g is None or oid_g is None:
-            return False
-        return (_closure_pairs_str(kg, _composite_pairs_ids(kg, marker.node),
-                                   seed=sid_g, seed_on_a=True)
-                .filter(F.col("b") == oid_g).limit(1).count()) > 0
     if isinstance(marker, OptPath):
-        return (triples_with_pattern(kg, s=s, p=marker.iri, o=o)
-                .limit(1).count()) > 0
-    sid, _, oid = _lookup_ids(kg, s, None, o)
+        rel = (triples_with_pattern(kg, s=s, p=marker.iri, o=o)
+               if marker.iri is not None
+               else _composite_pairs(kg, marker.node)
+               .filter((F.col("a") == s) & (F.col("b") == o)))
+        return rel.limit(1).count() > 0
+    if marker.iri is None:   # composite inner: global node ids, no guard
+        sid, oid = _node_global_ids(kg, s, o)
+        base, n_shared = _composite_pairs_ids(kg, marker.node), None
+    else:
+        sid, pid, oid = _lookup_ids(kg, s, marker.iri, o)
+        if not pid:
+            return False
+        base, n_shared = _closure_base_ids(kg, pid), kg.dict.n_shared
     return bool(sid and oid) and (
-        _closure_pairs_ids(kg, _pred_id(kg, marker.iri), seed_id=sid,
-                           seed_on_a=True, seeded=True)
+        closure(base, seed=sid, n_shared=n_shared)
         .filter(F.col("b") == oid).limit(1).count()) > 0
 
 
@@ -1491,11 +1428,8 @@ def _negset_arm(kg: KG, s: str, excl: tuple, o: str) -> DataFrame | bool:
     from . import sparql as bgp_mod
     from .query import _lookup_ids, triple_ids_with_id_pattern
 
-    spark = kg.spo.sparkSession
     s_var, o_var = s.startswith("?"), o.startswith("?")
-    var_cols = sorted({t[1:] for t in (s, o) if t.startswith("?")})
-    empty = spark.createDataFrame(
-        [], ", ".join(f"`{v}` string" for v in var_cols)) if var_cols else False
+    empty = _empty_rel(kg, s, o) if s_var or o_var else False
 
     sid, _, oid = _lookup_ids(kg, None if s_var else s, None,
                               None if o_var else o)
@@ -1687,10 +1621,7 @@ def _describe_df(kg: KG, resources: list[str]) -> DataFrame:
     for r in resources:
         parts.append(triples_with_pattern(kg, s=r))
         parts.append(triples_with_pattern(kg, o=r))
-    df = parts[0]
-    for other in parts[1:]:
-        df = df.unionAll(other)
-    return df.distinct()
+    return _union(parts).distinct()
 
 
 def _construct_df(kg: KG, solutions: DataFrame,
@@ -1713,10 +1644,7 @@ def _construct_df(kg: KG, solutions: DataFrame,
                          col_or_lit(o).alias("o"))
         for s, p, o in template
     ]
-    df = parts[0]
-    for other in parts[1:]:
-        df = df.unionAll(other)
-    return df.where(F.col("s").isNotNull() & F.col("p").isNotNull()
+    return _union(parts).where(F.col("s").isNotNull() & F.col("p").isNotNull()
                     & F.col("o").isNotNull()).distinct()
 
 

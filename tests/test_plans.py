@@ -166,8 +166,7 @@ def test_path_closure_iterates_on_ids(kg, tmp_path):
     kg_mat = replace(kg, pso=kg.pso.sparkSession.read.parquet(path))
 
     base = sparql_parser._closure_base_ids(kg_mat, pid)
-    step = sparql_parser.closure_step_ids(base, base, kg.dict.n_shared,
-                                          carry_a=True)
+    step = sparql_parser.closure_step(base, base, base, 1, kg.dict.n_shared)
     # per-step schema is pure 8-byte ids
     assert all(isinstance(f.dataType, LongType) for f in step.schema.fields)
     plan = _plan(step)
@@ -189,7 +188,6 @@ def test_composite_closure_iterates_on_ids(kg, tmp_path):
     (same lock style as test_path_closure_iterates_on_ids)."""
     from dataclasses import replace
 
-    from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
     from hdtspark import rules, sparql_parser
@@ -200,10 +198,8 @@ def test_composite_closure_iterates_on_ids(kg, tmp_path):
 
     node = ("seq", ("iri", rules.P_PREV), ("iri", rules.P_PREV))
     base = sparql_parser._composite_pairs_ids(kg_mat, node)
-    # per-step join exactly as _closure_pairs_str builds it (unseeded arm)
-    step = (base.select(F.col("a").alias("_fa"), F.col("b").alias("_n"))
-            .join(base, F.col("_n") == F.col("a"))
-            .select(F.col("_fa").alias("a"), "b").distinct())
+    # the unseeded step exactly as the closure loop builds it
+    step = sparql_parser.closure_step(base, base, base, 1)
     assert all(isinstance(f.dataType, LongType) for f in step.schema.fields)
     plan = _plan(step)
     assert "term" not in plan, plan
@@ -214,6 +210,79 @@ def test_composite_closure_iterates_on_ids(kg, tmp_path):
         kg, f"SELECT ?a ?b {{ ?a (<{rules.P_PREV}>/<{rules.P_PREV}>)+ ?b }}"
     ).limit(1).collect()
     assert rows and rows[0]["a"].startswith("http"), rows
+
+
+def test_closure_step_broadcasts_accumulator(spark, kg, tmp_path):
+    """A closure step anti-joins the new generation against a BROADCAST of
+    the accumulator (its size is known from the observed generation
+    counts), so the accumulator side has no Exchange and the step's one
+    ``Exchange hashpartitioning`` is the frontier dedup.  With the broadcast
+    threshold at -1 the plan falls back to Spark's own (sort-merge)."""
+    import re
+    from dataclasses import replace
+
+    from hdtspark import query, rules, sparql_parser
+
+    _, pid, _ = query._lookup_ids(kg, None, rules.P_PREV, None)
+    path = str(tmp_path / "pso")
+    kg.pso.write.parquet(path)
+    kg_mat = replace(kg, pso=spark.read.parquet(path))
+    base = sparql_parser._closure_base_ids(kg_mat, pid)
+    gen = base.localCheckpoint()
+    n = gen.count()
+
+    simple = _plan(sparql_parser.closure_step(gen, base, gen, n,
+                                              kg.dict.n_shared), "simple")
+    anti = [l for l in simple.splitlines() if "LeftAnti" in l]
+    assert anti and all("BroadcastHashJoin" in l and "BuildRight" in l
+                        for l in anti), simple
+    assert "SortMergeJoin" not in simple, simple
+    exchanges = [l for l in simple.splitlines()
+                 if "Exchange hashpartitioning" in l]
+    assert len(exchanges) == 1, simple
+    assert re.search(r"hashpartitioning\(a#\d+L, b#\d+L", exchanges[0]), simple
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "-1")
+    try:
+        simple = _plan(sparql_parser.closure_step(gen, base, gen, n,
+                                                  kg.dict.n_shared), "simple")
+    finally:
+        spark.conf.unset(key)
+    assert any("SortMergeJoin" in l and "LeftAnti" in l
+               for l in simple.splitlines()), simple
+
+
+def test_unbound_closure_runs_one_action_per_step(spark, kg, golden_rows):
+    """An unbound ``p+`` over the golden KG's ``prev`` chains runs one Spark
+    action per semi-naive step plus a constant (the lookup, the final
+    count).  Spark names an action's jobs after its call site; broadcasts
+    and adaptive shuffle stages run as extra jobs on Spark's own threads,
+    named after those, and belong to the action that needs them."""
+    from collections import Counter
+
+    from hdtspark import rules, sparql_parser
+
+    longest = max(Counter(r["conv_id"] for r in golden_rows).values()) - 1
+    steps = longest + 1      # generations 0..longest-1, then an empty one
+    q = f"SELECT ?a ?b {{ ?a <{rules.P_PREV}>+ ?b }}"
+    sparql_parser.query_df(kg, q).count()    # warm the cached projections
+
+    sc, group = spark.sparkContext, "test-closure-actions"
+    sc.setJobGroup(group, "unbound p+")
+    try:
+        sparql_parser.query_df(kg, q).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    names = [[info.name for info in map(st.getStageInfo,
+                                         st.getJobInfo(j).stageIds)
+              if info is not None]      # a skipped stage has no info
+             for j in jobs]
+    actions = [n for n in names
+               if any("withThreadLocalCaptured" not in s for s in n)]
+    assert steps <= len(actions) <= steps + 3, (len(actions), steps, len(jobs))
 
 
 def test_materialized_ops_scan_pushes_filters(spark, kg, tmp_path):

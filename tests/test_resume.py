@@ -58,3 +58,39 @@ def test_lineage_table(spark, transcripts, tmp_path):
     assert {"triples_str", "dict", "spo", "ops", "pso", "adj", "metrics"} <= stages
     spo_rows = sum(r["rows_out"] for r in lin.collect() if r["stage"] == "spo")
     assert spo_rows == 8854
+
+
+def test_reads_use_the_manifest_schema(spark, transcripts, tmp_path):
+    """Each stage's manifest records its output schema and read_table reads
+    with it, so serving a stage launches no schema-inference job; a manifest
+    without a schema (older layout) is incomplete and the stage rebuilds
+    once."""
+    import json
+
+    from hdtspark import cli
+
+    wh = str(tmp_path / "wh")
+    kg, mat = checkpoint.materialize_kg(spark, transcripts, wh)
+    for stage in ["triples_str", "dict", "spo", "ops", "pso", "adj", "metrics"]:
+        inferred = spark.read.parquet(f"{wh}/{stage}/data")
+        assert mat.read_table(stage).dtypes == inferred.dtypes, stage
+
+    sc, group = spark.sparkContext, "test-manifest-schema-reads"
+    sc.setJobGroup(group, "load")
+    try:
+        cli._load_kg(checkpoint.Materializer(spark, wh))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    path = f"{wh}/pso/{checkpoint.MANIFEST}"
+    with open(path) as fh:
+        m = json.load(fh)
+    del m["schema"]
+    with open(path, "w") as fh:
+        json.dump(m, fh)
+    _, mat2 = checkpoint.materialize_kg(spark, transcripts, wh)
+    rebuilt = [r.name for r in mat2.results if not r.skipped]
+    assert rebuilt == ["pso"], mat2.results
+    _, mat3 = checkpoint.materialize_kg(spark, transcripts, wh)
+    assert all(r.skipped for r in mat3.results), mat3.results
