@@ -75,16 +75,12 @@ def attribute_build(spark, transcripts, out):
     from hdtspark import bitmap_triples, encode, extract
     from hdtspark.dict_builder import build_dict
 
-    # --- extract variants, isolated by noop ---
-    timed(spark, "extract_pandas_noop",
-          lambda: noop(extract.extract_triples(transcripts,
-                                               use_pandas_udf=True)), out)
-    timed(spark, "extract_native_noop",
-          lambda: noop(extract.extract_triples(transcripts,
-                                               use_pandas_udf=False)), out)
+    # --- extract, isolated by noop ---
+    timed(spark, "extract_noop",
+          lambda: noop(extract.extract_triples(transcripts)), out)
 
     tri = extract.extract_triples(transcripts).persist(StorageLevel.DISK_ONLY)
-    timed(spark, "extract_pandas_to_diskcache", lambda: tri.count(), out)
+    timed(spark, "extract_to_diskcache", lambda: tri.count(), out)
 
     d = timed(spark, "dict_build_plans", lambda: build_dict(tri), out)
     timed(spark, "dict_ids_materialize", lambda: d.ids.count(), out)

@@ -184,8 +184,8 @@ class Materializer:
         )
 
 
-def materialize_kg(spark: SparkSession, transcripts: DataFrame, warehouse: str,
-                   use_pandas_udf: bool = False) -> tuple[KG, Materializer]:
+def materialize_kg(spark: SparkSession, transcripts: DataFrame,
+                   warehouse: str) -> tuple[KG, Materializer]:
     """Run (or resume) the full pipeline, stage by stage, into ``warehouse``.
 
     Stages: triples_str -> dict -> spo -> ops -> pso -> adj -> metrics.
@@ -202,7 +202,7 @@ def materialize_kg(spark: SparkSession, transcripts: DataFrame, warehouse: str,
                                   "tool", "ts"] if c in transcripts.columns])
 
     if not mat.stage_complete("triples_str", in_fp):
-        tri = extract.extract_triples(transcripts, use_pandas_udf=use_pandas_udf)
+        tri = extract.extract_triples(transcripts)
         mat.write_stage("triples_str", tri, in_fp)
     else:
         mat.write_stage("triples_str", None, in_fp)  # records the skip

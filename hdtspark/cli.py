@@ -63,7 +63,6 @@ def main(argv: list[str] | None = None) -> int:
     p_build = sub.add_parser("build")
     p_build.add_argument("--input", required=True, help="transcripts parquet dir")
     p_build.add_argument("--warehouse", required=True)
-    p_build.add_argument("--native-mentions", action="store_true")
 
     p_query = sub.add_parser("query")
     p_query.add_argument("--warehouse", required=True)
@@ -116,8 +115,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "build":
         from .checkpoint import materialize_kg
         transcripts = spark.read.parquet(args.input)
-        kg, mat = materialize_kg(spark, transcripts, args.warehouse,
-                                 use_pandas_udf=not args.native_mentions)
+        kg, mat = materialize_kg(spark, transcripts, args.warehouse)
         print(json.dumps({
             "stages": [{"stage": r.name, "skipped": r.skipped,
                         "rows": r.rows, "wall_ms": r.wall_ms}

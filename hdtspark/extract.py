@@ -6,10 +6,10 @@ Two subtrees over the transcripts scan:
    format_string / date_format) built as ONE array-of-structs per turn and
    exploded once, so the whole branch stays inside whole-stage codegen and
    the source is scanned a single time for all seven triple kinds.
-2. **Mention triples** — batched mention detection and entity-link scoring
-   as vectorized pandas/Arrow UDFs (axis-B requirement; no per-row Python
-   at the Spark level), then a broadcast join against the candidate
-   vocabulary and an argmax window to pick the winning entity.
+2. **Mention triples** — closed-vocabulary detection as one JVM
+   ``regexp_extract_all`` over the lower-cased text, then a literal
+   ``create_map`` lookup of each distinct surface's winning entity (the
+   entity-link argmax is a per-surface constant, computed on the driver).
 
 Semantics are exactly rules.turn_triples (shared source of truth with the
 pure-Python oracle and the DuckDB oracle SQL).
@@ -21,61 +21,9 @@ encoding mirrors reference src/hdt_graph.rs:90-103.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StringType, StructField, StructType
 
 from . import rules, vocab
-
-_MENTION_SCHEMA = ArrayType(
-    StructType([
-        StructField("surface", StringType()),
-        StructField("occ", IntegerType()),
-    ])
-)
-
-
-@F.pandas_udf(_MENTION_SCHEMA)
-def detect_mentions(text: pd.Series) -> pd.Series:
-    """Batched mention detection: closed-vocab word-boundary matches.
-
-    pandas vectorized string ops over the Arrow batch; returns
-    (surface, occurrence-count) pairs per row.
-    """
-    found = text.str.lower().str.findall(vocab.MENTION_PATTERN)
-
-    def counts(matches):
-        if not isinstance(matches, list) or not matches:
-            return []
-        c: dict[str, int] = {}
-        for m in matches:
-            c[m] = c.get(m, 0) + 1
-        return [(k, v) for k, v in sorted(c.items())]
-
-    return found.map(counts)
-
-
-@F.pandas_udf(DoubleType())
-def link_score(prior: pd.Series, occ: pd.Series) -> pd.Series:
-    """Batched entity-link scoring: prior + context bonus (vectorized)."""
-    return prior + 0.05 * (occ >= 2).astype("float64")
-
-
-def _argmax_winners(scored: DataFrame) -> DataFrame:
-    """argmax per (turn, surface): max score, tie-break min slug.
-
-    Expressed as ``min(struct(-score, slug))`` — struct ordering is
-    lexicographic, so this is (max score, then min slug) — a plain
-    aggregation with map-side partial combine instead of a window shuffle
-    + row_number (cheaper, and no single hot partition).
-    """
-    return (
-        scored.groupBy("conv_id", "turn_idx", "turn", "surface")
-        .agg(F.min(F.struct((-F.col("score")).alias("ns"),
-                            F.col("slug").alias("slug"))).alias("w"))
-        .select("conv_id", "turn_idx", "turn",
-                F.concat(F.lit(rules.BASE + "/e/"), F.col("w.slug")).alias("ent"))
-    )
 
 
 def _term_exprs(df: DataFrame):
@@ -115,77 +63,43 @@ def provenance_triples(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def mention_triples(transcripts: DataFrame) -> DataFrame:
-    """Mention + entity-typing triples via pandas-UDF detect/score stages."""
-    spark = transcripts.sparkSession
-    conv, turn = _term_exprs(transcripts)
-
-    cands = spark.createDataFrame(vocab.VOCAB, "surface string, slug string, prior double")
-
-    detected = (
-        transcripts
-        .select("conv_id", "turn_idx", turn.alias("turn"),
-                F.explode(detect_mentions(F.col("text"))).alias("m"))
-        .select("conv_id", "turn_idx", "turn",
-                F.col("m.surface").alias("surface"), F.col("m.occ").alias("occ"))
-    )
-
-    scored = (
-        detected.join(F.broadcast(cands), "surface")
-        .withColumn("score", link_score(F.col("prior"), F.col("occ")))
-    )
-    winners = _argmax_winners(scored)
-
-    mentions = winners.select(
-        F.col("turn").alias("s"), F.lit(rules.P_MENTIONS).alias("p"),
-        F.col("ent").alias("o"), "conv_id", "turn_idx",
-    )
-    ent_types = winners.select(
-        F.col("ent").alias("s"), F.lit(rules.P_TYPE).alias("p"),
-        F.lit(rules.C_ENTITY).alias("o"), "conv_id", "turn_idx",
-    )
-    return mentions.unionAll(ent_types)
-
-
-def _constant_winner_map() -> dict[str, str] | None:
-    """surface -> winning entity slug, when the argmax is occurrence-free.
+def _constant_winner_map() -> dict[str, str]:
+    """surface -> winning entity slug.
 
     The link score is ``prior + bonus(occ)`` where the bonus is identical
     for every candidate of a (turn, surface) group — a rank-preserving
     shift — so the per-group argmax collapses to a per-surface constant
     computable on the driver (guide §8: use what the optimizer cannot
-    know).  Verified against both bonus arms; returns None if a future
-    scoring change ever makes the winner occurrence-dependent (callers
-    then fall back to the generic join + argmax plan).
+    know).  Checked against both bonus arms: a scoring change that makes
+    the winner occurrence-dependent raises instead of extracting wrong
+    links.
     """
     winners = {}
     for s in vocab.SURFACES:
         w1, w2 = vocab.best_link(s, 1), vocab.best_link(s, 2)
         if w1 != w2:
-            return None
+            raise ValueError(
+                f"entity link for surface {s!r} depends on its occurrence "
+                f"count ({w1!r} once, {w2!r} repeated); the constant "
+                "winner map needs an occurrence-free argmax")
         winners[s] = w1
     return winners
 
 
-def mention_triples_native(transcripts: DataFrame) -> DataFrame:
-    """JVM-only variant (regexp_extract_all, no Python) — same semantics.
+def mention_triples(transcripts: DataFrame) -> DataFrame:
+    """Mention + entity-typing triples, JVM only (no Python boundary).
 
-    When the entity-link argmax is occurrence-independent (it is for the
-    shipped scoring model — a constant per-group bonus cannot reorder
-    candidates), the whole detect -> score -> argmax subplan collapses to
-    ``explode(distinct surfaces) -> literal-map lookup``: no Python
-    boundary, no broadcast join, no aggregation shuffle — the mention
-    branch becomes a single narrow whole-stage-codegen map over the
-    transcripts scan.  Falls back to the generic join + argmax plan if the
-    scoring model stops being shift-invariant.
+    The entity-link argmax is occurrence-independent (a constant per-group
+    bonus cannot reorder candidates), so detect -> score -> argmax
+    collapses to ``explode(distinct surfaces) -> literal-map lookup``: no
+    broadcast join, no aggregation shuffle — the mention branch is a single
+    narrow whole-stage-codegen map over the transcripts scan.
     """
     winners = _constant_winner_map()
-    if winners is None:
-        return _mention_triples_native_generic(transcripts)
-    conv, turn = _term_exprs(transcripts)
+    _, turn = _term_exprs(transcripts)
     ent_map = F.create_map(
         *[F.lit(x) for s in vocab.SURFACES
-          for x in (s, rules.BASE + "/e/" + winners[s])])
+          for x in (s, rules.ent_iri(winners[s]))])
     # regexp group 1 only ever yields closed-vocab surfaces, so the map
     # lookup is total (no dropped rows to filter).
     detected = transcripts.select(
@@ -208,49 +122,11 @@ def mention_triples_native(transcripts: DataFrame) -> DataFrame:
     return mentions.unionAll(ent_types)
 
 
-def _mention_triples_native_generic(transcripts: DataFrame) -> DataFrame:
-    """The generic JVM plan (detect -> broadcast-join candidates -> argmax
-    aggregation) for occurrence-dependent scoring models."""
-    spark = transcripts.sparkSession
-    conv, turn = _term_exprs(transcripts)
-    cands = spark.createDataFrame(vocab.VOCAB, "surface string, slug string, prior double")
-
-    detected = (
-        transcripts
-        .select("conv_id", "turn_idx", turn.alias("turn"),
-                F.explode(
-                    F.regexp_extract_all(F.lower("text"),
-                                         F.lit(vocab.MENTION_PATTERN), 1)
-                ).alias("surface"))
-        .groupBy("conv_id", "turn_idx", "turn", "surface")
-        .agg(F.count("*").cast("int").alias("occ"))
-    )
-    scored = (
-        detected.join(F.broadcast(cands), "surface")
-        .withColumn("score",
-                    F.col("prior") + F.when(F.col("occ") >= 2, 0.05).otherwise(0.0))
-    )
-    winners = _argmax_winners(scored)
-    mentions = winners.select(
-        F.col("turn").alias("s"), F.lit(rules.P_MENTIONS).alias("p"),
-        F.col("ent").alias("o"), "conv_id", "turn_idx",
-    )
-    ent_types = winners.select(
-        F.col("ent").alias("s"), F.lit(rules.P_TYPE).alias("p"),
-        F.lit(rules.C_ENTITY).alias("o"), "conv_id", "turn_idx",
-    )
-    return mentions.unionAll(ent_types)
-
-
-def extract_triples(transcripts: DataFrame, use_pandas_udf: bool = False) -> DataFrame:
+def extract_triples(transcripts: DataFrame) -> DataFrame:
     """transcripts -> raw string triples with (conv_id, turn_idx) provenance.
 
-    Default is the JVM-native mention path (guide §4.1: builtins over the
-    Python boundary — measured 13.4s vs ~8s steady at sf1.0, and the
-    collapsed-argmax plan removes the mention branch's aggregation shuffle
-    entirely).  ``use_pandas_udf=True`` selects the batched pandas-UDF
-    detect/score stages (identical output, exercised by tests and kept as
-    the plug-in shape for real model-based scorers).
+    Both branches are narrow maps over one transcripts scan (no exchange,
+    no aggregation), so the same plan serves batch builds and append-mode
+    streaming.
     """
-    mt = mention_triples if use_pandas_udf else mention_triples_native
-    return provenance_triples(transcripts).unionAll(mt(transcripts))
+    return provenance_triples(transcripts).unionAll(mention_triples(transcripts))

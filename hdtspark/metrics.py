@@ -1,9 +1,6 @@
-"""VOID-style statistics + lineage rows (reference fill_header,
-src/nt.rs:47-113; north-rule lineage/metrics requirement)."""
+"""VOID-style statistics (reference fill_header, src/nt.rs:47-113)."""
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -26,22 +23,3 @@ def void_stats_df(spo: DataFrame) -> DataFrame:
     return spo.sparkSession.createDataFrame(
         sorted(stats.items()), "key string, value long"
     )
-
-
-def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition row counts for the lineage table (north rule)."""
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows_out"))
-        .select(F.lit(stage).alias("stage"), "partition_id", "rows_out")
-    )
-
-
-class StageTimer:
-    """Wall-clock per stage, recorded into the lineage manifest."""
-
-    def __init__(self):
-        self.t0 = time.monotonic()
-
-    def elapsed_ms(self) -> int:
-        return int((time.monotonic() - self.t0) * 1000)

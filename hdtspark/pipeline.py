@@ -13,11 +13,10 @@ from .dict_builder import build_dict
 from .query import KG
 
 
-def build_kg(transcripts: DataFrame, use_pandas_udf: bool = False,
-             cache: bool = True, with_adjacency: bool = True,
-             cache_projections: bool = False) -> KG:
+def build_kg(transcripts: DataFrame, cache: bool = True,
+             with_adjacency: bool = True, cache_projections: bool = False) -> KG:
     """Run extract -> dict -> encode -> projections (+ adjacency)."""
-    triples_str = extract.extract_triples(transcripts, use_pandas_udf=use_pandas_udf)
+    triples_str = extract.extract_triples(transcripts)
     return build_kg_from_triples(triples_str, cache=cache,
                                  with_adjacency=with_adjacency,
                                  cache_projections=cache_projections)

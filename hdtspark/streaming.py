@@ -8,56 +8,18 @@ checkpointing into a staging triples table; the dictionary/encode stages
 (global sorts) then run as periodic batch compactions over the staging
 table via checkpoint.materialize_kg.
 
-Extraction is re-expressed shuffle-free for append-mode streaming: the
-entity-link argmax depends only on (surface, occurrences>=2), so the
-resolved winner table is precomputed from the vocabulary and broadcast —
-no streaming aggregation state.  Batch and streaming extraction are tested
-equal (tests/test_streaming.py).
+Extraction needs no streaming-specific plan: ``extract.extract_triples``
+is a narrow map over the scan (the entity-link winner is a literal map
+lookup), with no aggregation state, so it runs in append mode as is.
+Streamed and batch extraction are tested equal (tests/test_streaming.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
-from . import rules, vocab
-from .extract import _term_exprs, detect_mentions, provenance_triples
+from .extract import extract_triples
 from .synth import TRANSCRIPTS_SCHEMA
-
-
-def resolved_links_df(spark: SparkSession) -> DataFrame:
-    """Static (surface, occ_ge2, ent) winner table — the entity-link argmax
-    precomputed per (surface, context-bonus bucket)."""
-    rows = []
-    for surface in vocab.SURFACES:
-        for occ_ge2 in (False, True):
-            ent = rules.ent_iri(vocab.best_link(surface, 2 if occ_ge2 else 1))
-            rows.append((surface, occ_ge2, ent))
-    return spark.createDataFrame(rows, "surface string, occ_ge2 boolean, ent string")
-
-
-def extract_triples_stateless(transcripts: DataFrame) -> DataFrame:
-    """Streaming-safe extraction: identical output to extract.extract_triples
-    but with NO aggregation (broadcast-joined precomputed winners)."""
-    spark = transcripts.sparkSession
-    _, turn = _term_exprs(transcripts)
-    links = resolved_links_df(spark)
-
-    detected = (
-        transcripts
-        .select("conv_id", "turn_idx", turn.alias("turn"),
-                F.explode(detect_mentions(F.col("text"))).alias("m"))
-        .select("conv_id", "turn_idx", "turn",
-                F.col("m.surface").alias("surface"),
-                (F.col("m.occ") >= 2).alias("occ_ge2"))
-    )
-    winners = detected.join(F.broadcast(links), ["surface", "occ_ge2"])
-    mentions = winners.select(
-        F.col("turn").alias("s"), F.lit(rules.P_MENTIONS).alias("p"),
-        F.col("ent").alias("o"), "conv_id", "turn_idx")
-    ent_types = winners.select(
-        F.col("ent").alias("s"), F.lit(rules.P_TYPE).alias("p"),
-        F.lit(rules.C_ENTITY).alias("o"), "conv_id", "turn_idx")
-    return provenance_triples(transcripts).unionAll(mentions).unionAll(ent_types)
 
 
 def stream_extract(spark: SparkSession, input_dir: str, staging_dir: str,
@@ -72,7 +34,7 @@ def stream_extract(spark: SparkSession, input_dir: str, staging_dir: str,
         spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(input_dir)
     )
     q = (
-        extract_triples_stateless(stream)
+        extract_triples(stream)
         .writeStream.format("parquet")
         .option("path", staging_dir)
         .option("checkpointLocation", checkpoint_dir)

@@ -4,10 +4,10 @@ The mention detector matches surface forms from a closed vocabulary
 (word-boundary, case-insensitive).  Each surface maps to one or more
 candidate entities with a prior; the link scorer picks
 ``argmax(prior + 0.05 * [occurrences >= 2])`` with ties broken by slug.
-Priors are separated by > 0.1 per surface so the context bonus never flips
-the winner — the scoring machinery is real (vectorized, batched) but the
-outcome is exactly reproducible by the DuckDB oracle SQL and the pure-Python
-oracle.
+The bonus is the same for every candidate of a surface, so it never flips
+the winner: the argmax is a per-surface constant, which lets Spark
+extraction resolve links with a literal map lookup, and the outcome is
+exactly reproducible by the DuckDB oracle SQL and the pure-Python oracle.
 """
 
 from __future__ import annotations

@@ -35,3 +35,15 @@ def transcripts(spark, golden_rows):
 @pytest.fixture(scope="session")
 def kg(spark, transcripts):
     return pipeline.build_kg(transcripts)
+
+
+@pytest.fixture
+def run_cli(spark, monkeypatch):
+    """``cli.main`` run in-process against the test session (the CLI gets
+    its session from ``session.get_spark`` and stops it on exit)."""
+    import hdtspark.session as sess
+    from hdtspark import cli
+
+    monkeypatch.setattr(sess, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    return cli.main

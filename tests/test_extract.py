@@ -1,4 +1,4 @@
-"""Extraction correctness: Spark (pandas-UDF and native paths) vs oracle.
+"""Extraction correctness: Spark extraction vs oracle.
 
 Model: the reference's golden-fixture + metamorphic strategy (reference
 src/hdt.rs:460-520, src/triples.rs:451-507).
@@ -8,9 +8,10 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
-from hdtspark import extract, rules
+from hdtspark import extract, rules, vocab
 
 
 def _multiset(df):
@@ -23,10 +24,17 @@ def test_raw_triples_match_oracle(transcripts, golden_oracle):
     assert got == exp
 
 
-def test_native_path_matches_pandas_udf_path(transcripts):
-    a = _multiset(extract.extract_triples(transcripts, use_pandas_udf=True))
-    b = _multiset(extract.extract_triples(transcripts, use_pandas_udf=False))
-    assert a == b
+def test_occurrence_dependent_link_score_raises(transcripts, monkeypatch):
+    """The constant winner map assumes the context bonus never reorders a
+    surface's candidates; a candidate-dependent bonus breaks that, and
+    extraction must refuse rather than resolve links wrongly."""
+    monkeypatch.setattr(
+        vocab, "link_score",
+        lambda prior, occ: prior + (0.8 if occ >= 2 and prior < 0.5 else 0.0))
+    # "batch" has one candidate; "customer" is the first surface whose
+    # runner-up (prior 0.30) overtakes the winner (0.80) when repeated
+    with pytest.raises(ValueError, match="'customer'"):
+        extract.extract_triples(transcripts)
 
 
 def test_per_turn_text_equality(transcripts, golden_rows):

@@ -64,24 +64,14 @@ def test_build_kg_from_nt_file(spark, tmp_path):
     assert set(map(tuple, ids_to_strings(kg2, kg2.spo).collect())) == set(NASTY)
 
 
-def test_cli_import_nt_roundtrip(spark, kg, tmp_path, monkeypatch):
+def test_cli_import_nt_roundtrip(spark, kg, tmp_path, run_cli):
     """export-nt -> import-nt -> query returns the same enumeration."""
-    from hdtspark import cli, export
+    from hdtspark import export
 
     nt_dir = str(tmp_path / "nt")
     wh = str(tmp_path / "wh")
     export.write_nt(kg, nt_dir)
-
-    # run the CLI body in-process against the existing session
-    import hdtspark.session as sess
-    monkeypatch.setattr(sess, "get_spark", lambda **kw: spark)
-    real_stop = spark.stop
-    monkeypatch.setattr(spark, "stop", lambda: None)  # CLI stops the session
-    try:
-        rc = cli.main(["import-nt", "--input", nt_dir, "--warehouse", wh])
-    finally:
-        monkeypatch.setattr(spark, "stop", real_stop)
-    assert rc == 0
+    assert run_cli(["import-nt", "--input", nt_dir, "--warehouse", wh]) == 0
     spo = spark.read.parquet(f"{wh}/spo/data")
     assert sorted(map(tuple, spo.collect())) == \
         sorted(map(tuple, kg.spo.collect()))

@@ -53,6 +53,35 @@ def test_encode_broadcasts_small_dict(kg):
     assert "SortMergeJoin" not in simple, simple
 
 
+def test_dicts_above_broadcast_cap_use_shuffled_hash_joins(kg, monkeypatch):
+    """Above the broadcast cap the dictionary sides of the encode joins and
+    of the id -> string translation get a SHUFFLE_HASH hint, never a
+    sort-merge join.  The golden KG is pushed into that regime by lowering
+    the cap (query, sparql and sparql_parser read it at call time)."""
+    from hdtspark import query
+
+    monkeypatch.setattr(encode, "BROADCAST_DICT_MAX_TERMS", 10)
+    # translate a filtered id set: the translation of all of kg.spo may
+    # already be cached as KG.str_enum, and its cached plan would be used
+    ids = kg.spo.filter(F.col("s") > 0)
+    for df in (encode.encode_triples(kg.triples_str, kg.dict),
+               query.ids_to_strings(kg, ids)):
+        simple = _plan(df, "simple")
+        assert "ShuffledHashJoin" in simple, simple
+        assert "SortMergeJoin" not in simple, simple
+
+
+def test_extract_plan_is_one_narrow_scan(transcripts):
+    """Extraction is JVM expressions over one transcripts scan: no Python
+    boundary, no exchange, no aggregation."""
+    from hdtspark import extract
+
+    plan = _plan(extract.extract_triples(transcripts))
+    for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                   "Exchange", "HashAggregate"):
+        assert marker not in plan, marker
+
+
 def test_range_bucket_spreads_small_inputs(spark):
     """ADVICE r3: the fixed-fraction probe yields ~0 sample keys at a few
     thousand rows, collapsing to ONE bucket (a single-partition global

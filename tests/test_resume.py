@@ -18,6 +18,17 @@ def test_materialize_matches_inmemory(spark, transcripts, kg, tmp_path):
     assert [r.skipped for r in mat.results] == [False] * 7
 
 
+def test_cli_build(spark, transcripts, kg, tmp_path, run_cli):
+    """`cli build` over a transcripts parquet dir builds the same spo."""
+    src = str(tmp_path / "transcripts")
+    wh = str(tmp_path / "wh")
+    transcripts.write.parquet(src)
+    assert run_cli(["build", "--input", src, "--warehouse", wh]) == 0
+    spo = spark.read.parquet(f"{wh}/spo/data")
+    assert sorted(map(tuple, spo.collect())) == \
+        sorted(map(tuple, kg.spo.collect()))
+
+
 def test_rerun_skips_all_stages(spark, transcripts, tmp_path):
     wh = str(tmp_path / "wh")
     checkpoint.materialize_kg(spark, transcripts, wh)

@@ -12,12 +12,6 @@ def _multiset(df):
     return Counter(tuple(r) for r in df.collect())
 
 
-def test_stateless_extraction_equals_batch(spark, transcripts):
-    a = _multiset(streaming.extract_triples_stateless(transcripts))
-    b = _multiset(extract.extract_triples(transcripts))
-    assert a == b
-
-
 def test_incremental_stream_extract(spark, tmp_path):
     inp = str(tmp_path / "in")
     staging = str(tmp_path / "staging")
