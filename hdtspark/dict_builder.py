@@ -9,14 +9,16 @@ zipWithIndex-equivalent), matching reference src/dict_sect_pfc.rs:351-386
 
 Global ID routing (reference src/four_sect_dict.rs:98-150): shared terms
 keep their section id in both the subject and object ID spaces; overflow
-sections add ``n_shared``.
+sections add ``n_shared``.  ``FourSectDict`` owns every id space a query
+uses (``space``, ``lookup``), including the global node space path closures
+iterate on.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .ranking import dense_ids_grouped
 
@@ -66,6 +68,62 @@ class FourSectDict:
         return self.shared.unionAll(
             self.objects.select("term", (F.col("id") + self.n_shared).alias("id"))
         )
+
+    @property
+    def node_global(self) -> DataFrame:
+        """(term, id) over the global node-ID space: the subject space,
+        then object-only terms shifted past it (see ``node_global_expr``)."""
+        return self.subj_global.unionAll(self.objects.select(
+            "term", (F.col("id") + self.n_shared + self.n_subjects).alias("id")))
+
+    def node_global_expr(self, col: str, space: str) -> Column:
+        """Map an s-/o-/shared-space id column to the global node-ID space.
+
+        Shared terms keep 1..n_shared, subject-only terms keep
+        n_shared+1..n_shared+n_subj and object-only ids shift up by n_subj —
+        an arithmetic bijection to term identity, so global-id equality is
+        term equality with no dictionary join and no shared-section guard."""
+        if space in ("s", "shared"):
+            return F.col(col)
+        assert space == "o", space
+        return (F.when(F.col(col) <= self.n_shared, F.col(col))
+                .otherwise(F.col(col) + self.n_subjects))
+
+    def space(self, name: str) -> tuple[DataFrame, int]:
+        """The (term, id) table of an id space and its exact term count.
+
+        ``s``/``o``: the per-role subject/object spaces (shared ids valid in
+        both); ``p``: predicates; ``shared``: ids <= n_shared; ``node``: the
+        global node space of path closures."""
+        n_s = self.n_shared + self.n_subjects
+        if name == "s":
+            return self.subj_global, n_s
+        if name == "o":
+            return self.obj_global, self.n_shared + self.n_objects
+        if name == "p":
+            return self.predicates, self.n_predicates
+        if name == "shared":
+            return self.shared, self.n_shared
+        assert name == "node", name
+        return self.node_global, n_s + self.n_objects
+
+    def lookup(self, pairs) -> dict[tuple[str, str], int]:
+        """(space, term) pairs -> ids in ONE Spark job (a union of one
+        point-filter per space), the set form of the reference's
+        ``string_to_id`` (src/four_sect_dict.rs:98-150).  Absent pairs are
+        missing from the result; no pairs, no job."""
+        want: dict[str, set[str]] = {}
+        for sp, term in pairs:
+            want.setdefault(sp, set()).add(term)
+        parts = [self.space(sp)[0].filter(F.col("term").isin(sorted(terms)))
+                 .select(F.lit(sp).alias("k"), "term", "id")
+                 for sp, terms in want.items()]
+        if not parts:
+            return {}
+        u = parts[0]
+        for df in parts[1:]:
+            u = u.unionAll(df)
+        return {(r["k"], r["term"]): r["id"] for r in u.collect()}
 
     def sections_df(self) -> DataFrame:
         """All four sections as (section, term, id) — for tests/export."""

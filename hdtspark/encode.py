@@ -30,6 +30,22 @@ from .dict_builder import FourSectDict
 BROADCAST_DICT_MAX_TERMS = 1_000_000
 
 
+def dict_side(df: DataFrame, n_terms: int) -> DataFrame:
+    """The one join-side rule for every dictionary join (encode and every
+    id -> term translation): broadcast a side of ``n_terms`` terms below
+    ``BROADCAST_DICT_MAX_TERMS`` (read at call time), else hint it
+    SHUFFLE_HASH.  Term counts are exact from the dict build, so the choice
+    is deterministic.  The hash build side is one dict partition, unique per
+    key and evenly sized; the hint removes the sort-merge join's two sorts
+    of the fact or result side (measured at 13.7M triples, 2->8 cores: SMJ
+    45.4s -> 34.8s vs SHJ 36.1s -> 24.6s; sorts are memory-bandwidth-bound,
+    shared across cores).  AQE can still downgrade a shuffled join to a
+    broadcast at runtime and split skewed partitions."""
+    if n_terms < BROADCAST_DICT_MAX_TERMS:
+        return F.broadcast(df)
+    return df.hint("shuffle_hash")
+
+
 def dict_bits(d: FourSectDict) -> tuple[int, int, int]:
     """(bits_s, bits_p, bits_o): exact ID bit widths from the section
     counts — deterministic, no data inspection."""
@@ -142,22 +158,11 @@ def encode_triples(triples_str: DataFrame, d: FourSectDict,
         od = d.obj_global.withColumnRenamed("term", "o").withColumnRenamed("id", "oid")
         keys = ("p", "s", "o")
 
-    # Broadcast each dict side while it fits comfortably in executor memory
-    # (term counts are known exactly from the dict build, so the decision is
-    # deterministic): the fact side then never shuffles for the joins — one
-    # exchange total (the range partition below).  Above the cap, the dict
-    # side gets a SHUFFLE_HASH hint instead of the default sort-merge join:
-    # the two SMJ sorts of the fact side were the encode stage's scaling
-    # limiter on one box (measured at 13.7M triples, 2->8 cores: SMJ 45.4s
-    # -> 34.8s vs SHJ 36.1s -> 24.6s — 29% faster AND a better N->4N
-    # ratio; sorts are memory-bandwidth-bound, shared across cores).  The
-    # hash build side is one dict partition (~terms/shuffle-partitions),
-    # sized by the cluster conf at scale; AQE skew splitting still applies.
-    def side(df: DataFrame, n_terms: int) -> DataFrame:
-        if n_terms < BROADCAST_DICT_MAX_TERMS:
-            return F.broadcast(df)
-        return df.hint("shuffle_hash")
-
+    # Broadcast dict sides (``dict_side``): the fact side then never
+    # shuffles for the joins — one exchange total (the range partition
+    # below).  Above the cap the two SMJ sorts of the fact side were the
+    # encode stage's scaling limiter on one box, hence SHUFFLE_HASH.
+    #
     # JOIN ORDER: p first.  The predicate dict is tiny (always broadcast,
     # no shuffle), so putting it first lets Catalyst prune the predicate
     # key before the s-join's exchange — shuffle 1 then carries
@@ -167,9 +172,9 @@ def encode_triples(triples_str: DataFrame, d: FourSectDict,
     # scaling limiter), for free.
     encoded = (
         fact
-        .join(side(pd_, d.n_predicates), keys[0])
-        .join(side(sd, n_s), keys[1])
-        .join(side(od, n_o), keys[2])
+        .join(dict_side(pd_, d.n_predicates), keys[0])
+        .join(dict_side(sd, n_s), keys[1])
+        .join(dict_side(od, n_o), keys[2])
         .select(F.col("sid").alias("s"), F.col("pid").alias("p"),
                 F.col("oid").alias("o"))
     )

@@ -13,8 +13,11 @@ whose sort order makes the filter a pruned scan:
                                  tree, predicate_iter.rs)
     none bound        -> SPO full scan (reference SubjectIter::new)
 
-Results are translated back to strings by dictionary joins (the set-based
-analog of the reference's per-position TripleCache, src/hdt.rs:349-384).
+Results are translated back to strings by ``ids_to_strings``, the one id
+-> term translator of every query path (patterns, BGPs, negated sets and
+path closures): dictionary joins, the set-based analog of the reference's
+per-position TripleCache (src/hdt.rs:349-384).  Constants resolve through
+``FourSectDict.lookup``, the one constant lookup.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from .dict_builder import FourSectDict
+from .encode import dict_side
 
 
 @dataclass
@@ -76,31 +80,12 @@ class KG:
 
 
 def _lookup_ids(kg: KG, s: str | None, p: str | None, o: str | None):
-    """All bound-constant lookups in ONE Spark job (a union of the three
-    dictionary point-filters), mirroring the reference's three
-    ``string_to_id`` calls (src/hdt.rs:269) without three scheduler
-    round-trips.  Missing constant -> 0 (the reference's sentinel)."""
-    parts = []
-    if s is not None:
-        parts.append(kg.dict.subj_global.filter(F.col("term") == s)
-                     .select(F.lit("s").alias("k"), "id"))
-    if p is not None:
-        parts.append(kg.dict.predicates.filter(F.col("term") == p)
-                     .select(F.lit("p").alias("k"), "id"))
-    if o is not None:
-        parts.append(kg.dict.obj_global.filter(F.col("term") == o)
-                     .select(F.lit("o").alias("k"), "id"))
-    found: dict[str, int] = {}
-    if parts:
-        u = parts[0]
-        for df in parts[1:]:
-            u = u.unionAll(df)
-        for row in u.collect():
-            found[row["k"]] = row["id"]
-    sid = (found.get("s", 0)) if s is not None else None
-    pid = (found.get("p", 0)) if p is not None else None
-    oid = (found.get("o", 0)) if o is not None else None
-    return sid, pid, oid
+    """The bound positions' ids in one lookup job (``FourSectDict.lookup``),
+    as the reference's three ``string_to_id`` calls (src/hdt.rs:269).
+    Missing constant -> 0 (the reference's sentinel); unbound -> None."""
+    pos = (("s", s), ("p", p), ("o", o))
+    found = kg.dict.lookup([kt for kt in pos if kt[1] is not None])
+    return tuple(None if t is None else found.get((k, t), 0) for k, t in pos)
 
 
 def triple_ids_with_pattern(kg: KG, s: str | None, p: str | None,
@@ -138,39 +123,21 @@ def triple_ids_with_id_pattern(kg: KG, sid: int | None = None,
     return df.select("s", "p", "o")
 
 
-def ids_to_strings(kg: KG, ids: DataFrame) -> DataFrame:
-    """(s,p,o ids) -> (s,p,o strings) via three dictionary joins.
-
-    Each dict side is broadcast while its exact term count (known from the
-    build) fits executor memory, so translation never shuffles the result
-    set; huge dictionaries get a SHUFFLE_HASH hint instead of the default
-    sort-merge join (guide §3.1): the dict side is unique-per-id and
-    evenly sized, so a per-partition hash build is safe, and it removes
-    the two full sorts of the (potentially result-sized or dataset-sized)
-    ids side per join — AQE can still downgrade to a broadcast join at
-    runtime when the post-shuffle ids side turns out tiny.
-    """
-    from .encode import BROADCAST_DICT_MAX_TERMS
-
-    def maybe_b(df: DataFrame, n_terms: int) -> DataFrame:
-        if n_terms < BROADCAST_DICT_MAX_TERMS:
-            return F.broadcast(df)
-        return df.hint("shuffle_hash")
-
-    sd = maybe_b(kg.dict.subj_global.select(
-        F.col("id").alias("s"), F.col("term").alias("s_term")),
-        kg.dict.n_shared + kg.dict.n_subjects)
-    pd_ = maybe_b(kg.dict.predicates.select(
-        F.col("id").alias("p"), F.col("term").alias("p_term")),
-        kg.dict.n_predicates)
-    od = maybe_b(kg.dict.obj_global.select(
-        F.col("id").alias("o"), F.col("term").alias("o_term")),
-        kg.dict.n_shared + kg.dict.n_objects)
-    return (
-        ids.join(sd, "s").join(pd_, "p").join(od, "o")
-        .select(F.col("s_term").alias("s"), F.col("p_term").alias("p"),
-                F.col("o_term").alias("o"))
-    )
+def ids_to_strings(kg: KG, ids: DataFrame,
+                   space: str | dict[str, str] | None = None) -> DataFrame:
+    """Id columns -> term strings.  Each column joins the (id, term) table
+    of its id space, in column order; ``space`` names one space for all
+    columns or one per column, and defaults to each column's own name (so
+    an (s, p, o) id frame translates as triples).  Every join side follows
+    ``encode.dict_side``: broadcast below the cap, so translation never
+    shuffles the result set, and SHUFFLE_HASH above it."""
+    out = ids
+    for c in ids.columns:
+        sp = space if isinstance(space, str) else (space or {}).get(c, c)
+        tbl, n_terms = kg.dict.space(sp)
+        out = out.join(dict_side(tbl.select(
+            F.col("id").alias(c), F.col("term").alias(f"_t_{c}")), n_terms), c)
+    return out.select(*[F.col(f"_t_{c}").alias(c) for c in ids.columns])
 
 
 def _empty_str_triples(kg: KG) -> DataFrame:

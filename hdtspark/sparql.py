@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .query import KG
+from .query import KG, ids_to_strings, triple_ids_with_id_pattern
 
 
 def query(kg: KG, q: str) -> DataFrame:
@@ -44,45 +44,15 @@ def _is_var(t: str) -> bool:
     return t.startswith("?")
 
 
-def _lookup_constants(kg: KG, patterns) -> dict[tuple[str, str], int] | None:
-    """All constants of all patterns -> ids, in ONE Spark job (a union of
-    three isin point-filters).  Returns None if any constant is absent from
-    its dictionary section — the whole BGP is then provably empty without
-    launching a scan (the reference's short-circuit, src/hdt.rs:270-274)."""
-    want: dict[str, set[str]] = {"s": set(), "p": set(), "o": set()}
-    for s, p, o in patterns:
-        for pos, term in (("s", s), ("p", p), ("o", o)):
-            if not _is_var(term):
-                want[pos].add(term)
-    dicts = {"s": kg.dict.subj_global, "p": kg.dict.predicates,
-             "o": kg.dict.obj_global}
-    parts = [
-        dicts[pos].filter(F.col("term").isin(list(terms)))
-        .select(F.lit(pos).alias("k"), "term", "id")
-        for pos, terms in want.items() if terms
-    ]
-    found: dict[tuple[str, str], int] = {}
-    if parts:
-        u = parts[0]
-        for df in parts[1:]:
-            u = u.unionAll(df)
-        for row in u.collect():
-            found[(row["k"], row["term"])] = row["id"]
-    for pos, terms in want.items():
-        for t in terms:
-            if (pos, t) not in found:
-                return None
-    return found
-
-
 def bgp_ids(kg: KG, patterns: list[tuple[str, str, str]]
             ) -> tuple[DataFrame, dict[str, str]] | None:
-    """ID-level BGP join: route each pattern's constants to the projection
-    whose sort order prunes the scan, join patterns on 8-byte IDs, and defer
-    ALL string translation to the caller (the reference evaluates BGPs as
-    repeated ID-level quad-pattern lookups, src/sparql.rs:45-68 — round 2's
-    string-level join instantiated the full spo⋈3-dict enumeration per
-    pattern, k full scans with wide string shuffle keys for a k-pattern BGP).
+    """ID-level BGP join: each pattern is an id-level pattern query
+    (``query.triple_ids_with_id_pattern``, a pruned projection scan), the
+    patterns join on 8-byte IDs, and ALL string translation is deferred to
+    the caller (the reference evaluates BGPs as repeated ID-level
+    quad-pattern lookups, src/sparql.rs:45-68 — round 2's string-level join
+    instantiated the full spo⋈3-dict enumeration per pattern, k full scans
+    with wide string shuffle keys for a k-pattern BGP).
 
     Returns (ids_df, var -> id-space) where space is 's' (subject ids),
     'o' (object ids), 'p' (predicate ids), or 'shared' (ids <= n_shared,
@@ -98,8 +68,10 @@ def bgp_ids(kg: KG, patterns: list[tuple[str, str, str]]
     before the equi-join (a term occurring as both subject and object is by
     construction in the shared section with ONE id).
     """
-    ids = _lookup_constants(kg, patterns)
-    if ids is None:
+    want = {(pos, t) for pat in patterns
+            for pos, t in zip("spo", pat) if not _is_var(t)}
+    ids = kg.dict.lookup(want)
+    if len(ids) < len(want):    # an unknown constant: provably empty
         return None
     n_shared = kg.dict.n_shared
 
@@ -108,24 +80,9 @@ def bgp_ids(kg: KG, patterns: list[tuple[str, str, str]]
     col_of: dict[str, str] = {}    # var -> column name in result
 
     for i, (s, p, o) in enumerate(patterns):
-        sid = None if _is_var(s) else ids[("s", s)]
-        pid = None if _is_var(p) else ids[("p", p)]
-        oid = None if _is_var(o) else ids[("o", o)]
-
-        # route to the projection whose leading sort column is bound
-        if sid is not None:
-            df = kg.spo.filter(F.col("s") == sid)
-        elif oid is not None:
-            df = kg.ops.filter(F.col("o") == oid)
-        elif pid is not None:
-            df = kg.pso.filter(F.col("p") == pid)
-        else:
-            df = kg.spo
-        if pid is not None:
-            df = df.filter(F.col("p") == pid)
-        if oid is not None and sid is not None:
-            df = df.filter(F.col("o") == oid)
-
+        df = triple_ids_with_id_pattern(
+            kg, *(None if _is_var(t) else ids[(pos, t)]
+                  for pos, t in zip("spo", (s, p, o))))
         # variable columns of this pattern, renamed to per-pattern names
         local: dict[str, tuple[str, str]] = {}  # var -> (colname, space)
         for pos, term in (("s", s), ("p", p), ("o", o)):
@@ -192,33 +149,6 @@ def bgp_ids(kg: KG, patterns: list[tuple[str, str, str]]
     return result.select(*[F.col(col_of[v]).alias(v) for v in sorted(space)]), space
 
 
-def _translate_vars(kg: KG, ids_df: DataFrame, space: dict[str, str]) -> DataFrame:
-    """Translate each variable column to term strings ONCE, at the end,
-    against the dictionary of its ID space (broadcast below the cap;
-    SHUFFLE_HASH above it — see query.ids_to_strings)."""
-    from .encode import BROADCAST_DICT_MAX_TERMS
-
-    def maybe_b(df: DataFrame, n_terms: int) -> DataFrame:
-        if n_terms < BROADCAST_DICT_MAX_TERMS:
-            return F.broadcast(df)
-        return df.hint("shuffle_hash")
-
-    d = kg.dict
-    tables = {
-        "s": (d.subj_global, d.n_shared + d.n_subjects),
-        "o": (d.obj_global, d.n_shared + d.n_objects),
-        "shared": (d.shared, d.n_shared),
-        "p": (d.predicates, d.n_predicates),
-    }
-    out = ids_df
-    for v in ids_df.columns:
-        tbl, n_terms = tables[space[v]]
-        out = out.join(
-            maybe_b(tbl.select(F.col("id").alias(v),
-                               F.col("term").alias(f"_t_{v}")), n_terms), v)
-    return out.select(*[F.col(f"_t_{v}").alias(v) for v in ids_df.columns])
-
-
 def bgp(kg: KG, patterns: list[tuple[str, str, str]]) -> DataFrame:
     """Evaluate a basic graph pattern: each element is (s, p, o) where a
     leading '?' marks a variable; constants are canonical term strings.
@@ -239,7 +169,7 @@ def bgp(kg: KG, patterns: list[tuple[str, str, str]]) -> DataFrame:
         schema = ", ".join(f"`{v}` string" for v in all_vars)
         return kg.spo.sparkSession.createDataFrame([], schema)
     ids_df, space = compiled
-    return _translate_vars(kg, ids_df, space)
+    return ids_to_strings(kg, ids_df, space)
 
 
 def bgp_strings(kg: KG, patterns: list[tuple[str, str, str]]) -> DataFrame:

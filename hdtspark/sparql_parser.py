@@ -48,7 +48,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
-from .query import KG
+from .query import KG, ids_to_strings, triple_ids_with_id_pattern
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -87,8 +87,8 @@ class PlusPath:
     pattern list.  A single (optionally inverted) IRI sets ``iri``; a
     COMPOSITE inner path (e.g. ``(a/b)+``) sets ``node`` (the path AST)
     instead.  Either way the evaluator states the edge relation on 8-byte
-    ids (PSO per-role ids, or global node ids for a composite built
-    through the ID-level BGP compiler) and closes it with ONE distributed
+    global node ids (the PSO projection's pairs for an IRI, the ID-level
+    BGP compiler's for a composite) and closes it with ONE distributed
     semi-naive loop (``closure``): each step joins only the newest
     generation with the edges and runs exactly one Spark action, and the
     anti-join against the accumulated generations broadcasts them while
@@ -966,11 +966,11 @@ def _desugar(node, s, o, fresh) -> list[list]:
     fresh join variable (via ``fresh()``), ``^`` swaps subject/object,
     ``|`` multiplies alternatives, ``!(…)`` stays symbolic (NegSet);
     ``+``/``*``/``?`` stay symbolic (PlusPath/StarPath/OptPath) for the
-    evaluator's distributed closure — over a single (optionally inverted)
-    IRI by ``iri`` (ID-level iteration) or any composite inner by ``node``
-    (string-pair iteration over a BGP-compiled edge relation).  Everything
-    else rides the ID-level BGP compiler unchanged.  Shared by the parser
-    and the composite-closure evaluator (_composite_pairs)."""
+    evaluator — over a single (optionally inverted) IRI by ``iri`` or any
+    composite inner by ``node``; both iterate on global node ids
+    (``_path_edges``).  Everything else rides the ID-level BGP compiler
+    unchanged.  Shared by the parser and the composite edge relation
+    (``_composite_pairs_ids``)."""
     kind = node[0]
     if kind == "iri":
         return [[(s, node[1], o)]]
@@ -1012,42 +1012,33 @@ _ID_BYTES = 8
 
 
 def _closure_base_ids(kg: KG, pid: int) -> DataFrame:
-    """Edge relation of predicate ``pid`` as ID pairs from the PSO
-    projection: (a = subject-space id, b = object-space id).  The pruned
-    p-filter scan is the same route as Q6 (?P?); no strings anywhere."""
+    """Edge relation of predicate ``pid`` as global node-ID pairs (a, b) from
+    the PSO projection: a subject id already is a node id, an object id maps
+    through ``FourSectDict.node_global_expr``.  The pruned p-filter scan is
+    the same route as Q6 (?P?); no strings anywhere."""
     return kg.pso.filter(F.col("p") == pid).select(
-        F.col("s").alias("a"), F.col("o").alias("b"))
+        F.col("s").alias("a"), kg.dict.node_global_expr("o", "o").alias("b"))
 
 
 def closure_step(frontier: DataFrame, base: DataFrame, acc: DataFrame,
-                 acc_rows: int, n_shared: int | None = None) -> DataFrame:
-    """One semi-naive step on 8-byte ids: walk one ``base`` edge from each
-    frontier row's node ``b``, dedup, and drop what the accumulator ``acc``
-    (``acc_rows`` rows) already holds.  The frontier is (a, b) origin/node
-    pairs (full closure) or a bare node column ``b`` (seeded walk); the
-    result has the frontier's columns.  The plan is locked in
-    tests/test_plans.py.
+                 acc_rows: int) -> DataFrame:
+    """One semi-naive step on 8-byte global node ids: walk one ``base`` edge
+    from each frontier row's node ``b``, dedup, and drop what the
+    accumulator ``acc`` (``acc_rows`` rows) already holds.  The frontier is
+    (a, b) origin/node pairs (full closure) or a bare node column ``b``
+    (seeded walk); the result has the frontier's columns.  The plan is
+    locked in tests/test_plans.py.
 
     ``acc`` is a union of checkpointed generations, which carry no size
     statistics, so Spark would plan a sort-merge anti-join that re-shuffles
     the whole accumulator every step.  Its exact size is known here: while
     ``acc_rows`` x row width fits ``spark.sql.autoBroadcastJoinThreshold``
     the anti-join broadcasts it, and the frontier dedup is the step's only
-    exchange.  Above the threshold (or at -1) Spark plans as it would.
-
-    ``n_shared`` guards per-role ids: a walk continues from an object-space
-    id through a subject-space id of equal value only in the shared section
-    (ids collide numerically above ``n_shared``; a term occurring as both
-    subject and object is shared, with one id).  Global node ids need no
-    guard (None)."""
-    f, e = frontier, base
-    if n_shared is not None:
-        f = f.filter(F.col("b") <= n_shared)
-        e = e.filter(F.col("a") <= n_shared)
+    exchange.  Above the threshold (or at -1) Spark plans as it would."""
     carry = ["a"] if "a" in frontier.columns else []
-    new = (f.select(*[F.col(c).alias("_fa") for c in carry],
-                    F.col("b").alias("_n"))
-           .join(e, F.col("_n") == F.col("a"))
+    new = (frontier.select(*[F.col(c).alias("_fa") for c in carry],
+                           F.col("b").alias("_n"))
+           .join(base, F.col("_n") == F.col("a"))
            .select(*[F.col("_fa").alias(c) for c in carry], "b").distinct())
     threshold = (acc.sparkSession._jsparkSession.sessionState().conf()
                  .autoBroadcastJoinThreshold())
@@ -1056,16 +1047,16 @@ def closure_step(frontier: DataFrame, base: DataFrame, acc: DataFrame,
     return new.join(acc, frontier.columns, "left_anti")
 
 
-def closure(base: DataFrame, seed: int | None = None, backward: bool = False,
-            n_shared: int | None = None) -> DataFrame:
-    """The one-or-more transitive closure of the id edge relation ``base``
-    (a, b) — the single semi-naive loop behind every ``p+``/``p*``/
-    ``(path)+`` evaluation.
+def closure(base: DataFrame, seed: int | None = None,
+            backward: bool = False) -> DataFrame:
+    """The one-or-more transitive closure of the global node-id edge
+    relation ``base`` (a, b) — the single semi-naive loop behind every
+    ``p+``/``p*``/``(path)+`` evaluation.
 
     Unseeded -> all (a, b) pairs.  Seeded -> the set of nodes reachable from
     ``seed`` as one column ``b`` (a BFS whose frontier stays result-sized);
     ``backward`` walks the edges in reverse, so ``b`` then holds the nodes
-    that reach ``seed``.  ``n_shared``: see ``closure_step``.
+    that reach ``seed``.
 
     Generation 0 is the edge set (or the seed's out-edges); each step derives
     the next generation from the last one only (``closure_step``).  A step
@@ -1103,7 +1094,7 @@ def closure(base: DataFrame, seed: int | None = None, backward: bool = False,
                 f"path closure still growing at step {step}: last frontier "
                 f"{n} rows, {total} rows accumulated (raise "
                 f"sparql_parser.CLOSURE_MAX_ITERS, now {max_iters})")
-        new = closure_step(gen, base, _union(gens), total, n_shared)
+        new = closure_step(gen, base, _union(gens), total)
     return _union(gens) if gens else gen
 
 
@@ -1114,65 +1105,18 @@ def _union(dfs: list[DataFrame]) -> DataFrame:
     return out
 
 
-def _composite_pairs(kg: KG, node) -> DataFrame:
-    """The edge relation of a composite path AST as STRING pairs (a, b).
-
-    Each desugared alternative compiles through the ID-level BGP joiner
-    (``bgp`` — pruned projection scans, result-only translation).  Used by
-    the SINGLE-STEP composite arms (``(path)?``, both-bound probes), which
-    are edge-relation-sized anyway; closures iterate on global node IDs
-    instead (``_composite_pairs_ids``)."""
-    from . import sparql as bgp_mod
-
-    n = [0]
-
-    def fresh() -> str:
-        n[0] += 1
-        return f"?__cp{n[0]}"
-
-    parts = []
-    for patterns in _desugar(node, "?__ca", "?__cb", fresh):
-        if any(not isinstance(p[1], str) for p in patterns):
-            raise ValueError(
-                "nested closure/negated set inside a closed path is not "
-                "supported")
-        df = bgp_mod.bgp(kg, patterns)
-        parts.append(df.select(F.col("__ca").alias("a"),
-                               F.col("__cb").alias("b")))
-    return _union(parts).distinct()
-
-
-def _node_global_expr(col: str, space: str, n_shared: int, n_subj: int):
-    """Map an s-/o-/shared-space id column to the GLOBAL node-ID space.
-
-    Global ids: shared terms keep 1..n_shared, subject-only terms keep
-    n_shared+1..n_shared+n_subj, object-only ids shift up by n_subj — a
-    pure arithmetic bijection to term identity, so global-id equality ⇔
-    term equality with NO dictionary join and no shared-section guard.
-    """
-    if space in ("s", "shared"):
-        return F.col(col)
-    assert space == "o", space
-    return (F.when(F.col(col) <= n_shared, F.col(col))
-            .otherwise(F.col(col) + n_subj))
-
-
 def _composite_pairs_ids(kg: KG, node) -> DataFrame:
-    """The edge relation of a composite path AST as GLOBAL-node-ID pairs
-    (a, b) — 8-byte rows for the closure iteration (VERDICT r5 next #4:
-    the r5 composite closure iterated on canonical term strings, paying
-    ~10x-wider shuffles per step than the ids need).
+    """The edge relation of a composite path AST as global node-ID pairs
+    (a, b): 8-byte rows for the closure iteration and the single-step arms.
 
     Each desugared alternative compiles through the ID-level BGP joiner
     (``bgp_ids`` — pruned projection scans, NO translation); its two
     endpoint columns are then mapped into the global node-ID space, which
     makes ids comparable across alternatives that bound the endpoints in
     different ID spaces (e.g. a forward arm ending o-space unioned with an
-    inverse arm ending s-space).  Built ONCE per closure."""
+    inverse arm ending s-space)."""
     from . import sparql as bgp_mod
 
-    spark = kg.spo.sparkSession
-    n_shared, n_subj = kg.dict.n_shared, kg.dict.n_subjects
     n = [0]
 
     def fresh() -> str:
@@ -1190,46 +1134,11 @@ def _composite_pairs_ids(kg: KG, node) -> DataFrame:
             continue
         ids_df, space = compiled
         parts.append(ids_df.select(
-            _node_global_expr("__ca", space["__ca"], n_shared, n_subj)
-            .alias("a"),
-            _node_global_expr("__cb", space["__cb"], n_shared, n_subj)
-            .alias("b")))
+            kg.dict.node_global_expr("__ca", space["__ca"]).alias("a"),
+            kg.dict.node_global_expr("__cb", space["__cb"]).alias("b")))
     if not parts:
-        return spark.createDataFrame([], "a long, b long")
+        return kg.spo.sparkSession.createDataFrame([], "a long, b long")
     return _union(parts).distinct()
-
-
-def _node_global_dict(kg: KG) -> tuple[DataFrame, int]:
-    """(term, id) over the global node-ID space, with its term count."""
-    d = kg.dict
-    shift = d.n_shared + d.n_subjects
-    nd = d.subj_global.unionAll(
-        d.objects.select("term", (F.col("id") + shift).alias("id")))
-    return nd, shift + d.n_objects
-
-
-def _translate_node_global(kg: KG, ids_df: DataFrame) -> DataFrame:
-    """Translate every column of ``ids_df`` (global node ids) to term
-    strings — broadcast under the cap, SHUFFLE_HASH above it (same policy
-    as query.ids_to_strings)."""
-    from .encode import BROADCAST_DICT_MAX_TERMS
-
-    nd, n_terms = _node_global_dict(kg)
-    out = ids_df
-    for v in ids_df.columns:
-        tbl = nd.select(F.col("id").alias(v), F.col("term").alias(f"_t_{v}"))
-        tbl = (F.broadcast(tbl) if n_terms < BROADCAST_DICT_MAX_TERMS
-               else tbl.hint("shuffle_hash"))
-        out = out.join(tbl, v)
-    return out.select(*[F.col(f"_t_{v}").alias(v) for v in ids_df.columns])
-
-
-def _node_global_ids(kg: KG, *terms: str) -> list[int]:
-    """Terms -> global node ids in ONE point-filter job; 0 if absent."""
-    nd, _ = _node_global_dict(kg)
-    found = {r["term"]: r["id"]
-             for r in nd.filter(F.col("term").isin(list(terms))).collect()}
-    return [found.get(t, 0) for t in terms]
 
 
 def _nodes_df(kg: KG) -> DataFrame:
@@ -1271,110 +1180,54 @@ def _empty_rel(kg: KG, s: str, o: str) -> DataFrame:
         [], ", ".join(f"`{v}` string" for v in cols))
 
 
-def _plus_rel_composite(kg: KG, s: str, node, o: str) -> DataFrame:
-    """``(composite)+`` closure relation with >=1 free endpoint.
-
-    The edge relation is BGP-compiled to GLOBAL node-ID pairs
-    (``_composite_pairs_ids``; global-id equality is term equality, so the
-    loop needs no guard) and closed by ``closure``; translation to term
-    strings happens ONCE on the result."""
-    base = _composite_pairs_ids(kg, node)
-    s_var, o_var = s.startswith("?"), o.startswith("?")
-    if s_var and o_var:
-        pairs = closure(base)
-        if s == o:
-            ids = (pairs.filter(F.col("a") == F.col("b"))
-                   .select(F.col("a").alias(s[1:])))
-            return _translate_node_global(kg, ids)
-        return _translate_node_global(
-            kg, pairs.select(F.col("a").alias(s[1:]),
-                             F.col("b").alias(o[1:])))
-    seed_term, out = (s, o) if o_var else (o, s)
-    (seed,) = _node_global_ids(kg, seed_term)
-    if not seed:
-        return _empty_rel(kg, s, o)
-    ids = closure(base, seed=seed, backward=not o_var)
-    return _translate_node_global(kg, ids.select(F.col("b").alias(out[1:])))
-
-
-def _plus_rel(kg: KG, s: str, iri: str, o: str) -> DataFrame:
-    """The ``p+`` closure relation with >=1 free endpoint, as string-named
-    var columns.  The predicate and the bound endpoint resolve in one
-    lookup job; the closure runs on per-role ids from the PSO projection
-    (``closure`` with the shared-section guard); var columns are translated
-    to term strings ONCE here, result-sized, via the same broadcast
-    dictionary joins as the BGP compiler."""
-    from . import sparql as bgp_mod
-    from .query import _lookup_ids
-
-    s_var, o_var = s.startswith("?"), o.startswith("?")
-    sid, pid, oid = _lookup_ids(kg, None if s_var else s, iri,
-                                None if o_var else o)
-    if not pid or not (s_var or sid) or not (o_var or oid):
-        return _empty_rel(kg, s, o)
-    base, n_shared = _closure_base_ids(kg, pid), kg.dict.n_shared
-    if s_var and o_var:
-        pairs = closure(base, n_shared=n_shared)
-        if s == o:
-            # same var both ends: a reflexive closure pair — ID equality is
-            # term equality only in the shared section (disjoint spaces)
-            ids = (pairs.filter((F.col("a") == F.col("b"))
-                                & (F.col("a") <= n_shared))
-                   .select(F.col("a").alias(s[1:])))
-            return bgp_mod._translate_vars(kg, ids, {s[1:]: "shared"})
-        ids = pairs.select(F.col("a").alias(s[1:]), F.col("b").alias(o[1:]))
-        return bgp_mod._translate_vars(kg, ids, {s[1:]: "s", o[1:]: "o"})
-    # one end bound: a BFS forward from a subject-space seed (reaching
-    # object-space ids) or backward from an object-space seed
-    seed, out, space = (sid, o, "o") if o_var else (oid, s, "s")
-    ids = closure(base, seed=seed, backward=not o_var, n_shared=n_shared)
-    return bgp_mod._translate_vars(
-        kg, ids.select(F.col("b").alias(out[1:])), {out[1:]: space})
-
-
-def _step_rel(kg: KG, s: str, iri: str, o: str) -> DataFrame:
-    """Single-step relation (the ``p?`` one-arm) — the ordinary ID-routed
-    pattern query projected to the pattern's var columns."""
-    from .query import triples_with_pattern
-
-    s_var, o_var = s.startswith("?"), o.startswith("?")
-    tp = triples_with_pattern(kg, s=None if s_var else s, p=iri,
-                              o=None if o_var else o)
-    if s_var and o_var:
-        if s == o:
-            return (tp.filter(F.col("s") == F.col("o"))
-                    .select(F.col("s").alias(s[1:])))
-        return tp.select(F.col("s").alias(s[1:]), F.col("o").alias(o[1:]))
-    if o_var:
-        return tp.select(F.col("o").alias(o[1:]))
-    return tp.select(F.col("s").alias(s[1:]))
-
-
-def _step_rel_composite(kg: KG, s: str, node, o: str) -> DataFrame:
-    """Single-step relation of a composite inner (the ``(path)?`` one-arm)."""
-    base = _composite_pairs(kg, node)
-    s_var, o_var = s.startswith("?"), o.startswith("?")
-    if s_var and o_var:
-        if s == o:
-            return (base.filter(F.col("a") == F.col("b"))
-                    .select(F.col("a").alias(s[1:])))
-        return base.select(F.col("a").alias(s[1:]), F.col("b").alias(o[1:]))
-    if o_var:
-        return base.filter(F.col("a") == s).select(F.col("b").alias(o[1:]))
-    return base.filter(F.col("b") == o).select(F.col("a").alias(s[1:]))
+def _path_edges(kg: KG, s: str, marker, o: str
+                ) -> tuple[DataFrame | None, dict[str, int]]:
+    """A path marker's inner edge relation on global node ids, and the node
+    ids of its bound endpoints.  The endpoints and a single IRI's predicate
+    resolve in ONE lookup job; a composite inner compiles through
+    ``_composite_pairs_ids``.  The relation is None when a constant is not
+    in the graph."""
+    want = [("node", t) for t in (s, o) if not t.startswith("?")]
+    if marker.iri is not None:
+        want.append(("p", marker.iri))
+    found = kg.dict.lookup(want)
+    nodes = {t: i for (sp, t), i in found.items() if sp == "node"}
+    if len(found) < len(set(want)):
+        return None, nodes
+    if marker.iri is not None:
+        return _closure_base_ids(kg, found[("p", marker.iri)]), nodes
+    return _composite_pairs_ids(kg, marker.node), nodes
 
 
 def _one_arm_rel(kg: KG, s: str, marker, o: str) -> DataFrame:
-    """The non-zero arm of a symbolic path marker."""
-    if isinstance(marker, PlusPath):
-        return (_plus_rel(kg, s, marker.iri, o) if marker.iri is not None
-                else _plus_rel_composite(kg, s, marker.node, o))
-    if isinstance(marker, StarPath):
-        return (_plus_rel(kg, s, marker.iri, o) if marker.iri is not None
-                else _plus_rel_composite(kg, s, marker.node, o))
-    assert isinstance(marker, OptPath), marker
-    return (_step_rel(kg, s, marker.iri, o) if marker.iri is not None
-            else _step_rel_composite(kg, s, marker.node, o))
+    """The non-zero arm of a path marker with >=1 free endpoint: the inner
+    edge relation (``p?``) or its ``closure`` (``p+``/``p*``), on global
+    node ids, translated to term strings ONCE, result-sized, through the
+    node table."""
+    base, nodes = _path_edges(kg, s, marker, o)
+    if base is None:
+        return _empty_rel(kg, s, o)
+    step = isinstance(marker, OptPath)
+    s_var, o_var = s.startswith("?"), o.startswith("?")
+    if s_var and o_var:
+        pairs = base if step else closure(base)
+        if s == o:
+            ids = (pairs.filter(F.col("a") == F.col("b"))
+                   .select(F.col("a").alias(s[1:])))
+        else:
+            ids = pairs.select(F.col("a").alias(s[1:]),
+                               F.col("b").alias(o[1:]))
+    else:
+        # one end bound: walk forward from the subject (reaching objects)
+        # or backward from the object
+        seed, out = (nodes[s], o) if o_var else (nodes[o], s)
+        if step:
+            at, to = ("a", "b") if o_var else ("b", "a")
+            reach = base.filter(F.col(at) == seed).select(F.col(to).alias("b"))
+        else:
+            reach = closure(base, seed=seed, backward=not o_var)
+        ids = reach.select(F.col("b").alias(out[1:]))
+    return ids_to_strings(kg, ids, "node")
 
 
 def _path_rel(kg: KG, s: str, marker, o: str) -> DataFrame:
@@ -1386,76 +1239,53 @@ def _path_rel(kg: KG, s: str, marker, o: str) -> DataFrame:
     return rel.unionByName(_zero_rel(kg, s, o)).distinct()
 
 
-def _node_exists(kg: KG, term: str) -> bool:
-    return _nodes_df(kg).filter(F.col("term") == term).limit(1).count() > 0
-
-
 def _path_hit(kg: KG, s: str, marker, o: str) -> bool:
-    """Both endpoints bound: existence test.  A closure resolves its
-    predicate and both endpoints in one lookup job, then runs a BFS from
-    ``s`` (``closure``) and probes its result for ``o``."""
-    from .query import _lookup_ids, triples_with_pattern
-
-    if isinstance(marker, (StarPath, OptPath)) and s == o:
-        if _node_exists(kg, s):
-            return True
-    if isinstance(marker, OptPath):
-        rel = (triples_with_pattern(kg, s=s, p=marker.iri, o=o)
-               if marker.iri is not None
-               else _composite_pairs(kg, marker.node)
-               .filter((F.col("a") == s) & (F.col("b") == o)))
-        return rel.limit(1).count() > 0
-    if marker.iri is None:   # composite inner: global node ids, no guard
-        sid, oid = _node_global_ids(kg, s, o)
-        base, n_shared = _composite_pairs_ids(kg, marker.node), None
-    else:
-        sid, pid, oid = _lookup_ids(kg, s, marker.iri, o)
-        if not pid:
-            return False
-        base, n_shared = _closure_base_ids(kg, pid), kg.dict.n_shared
-    return bool(sid and oid) and (
-        closure(base, seed=sid, n_shared=n_shared)
-        .filter(F.col("b") == oid).limit(1).count()) > 0
+    """Both endpoints bound: an existence probe on ids, never translated.
+    The zero-length arm hits when ``s == o`` is a graph node; ``p?`` probes
+    the edge relation for the pair, a closure runs a BFS from ``s``
+    (``closure``) and probes its result for ``o``."""
+    base, nodes = _path_edges(kg, s, marker, o)
+    if isinstance(marker, (StarPath, OptPath)) and s == o and s in nodes:
+        return True
+    if base is None:
+        return False
+    sid, oid = nodes[s], nodes[o]
+    hit = (base.filter((F.col("a") == sid) & (F.col("b") == oid))
+           if isinstance(marker, OptPath)
+           else closure(base, seed=sid).filter(F.col("b") == oid))
+    return hit.limit(1).count() > 0
 
 
 def _negset_arm(kg: KG, s: str, excl: tuple, o: str) -> DataFrame | bool:
     """One arm of a negated property set: edges matching the (s, o)
     endpoint bindings whose predicate is NOT in ``excl``.  ID route — bound
-    endpoints resolve to ids, the scan keeps its pruned projection routing,
-    the exclusion is a residual ``p NOT IN`` filter over the (few) excluded
-    predicate ids, and only result rows are translated.  Returns a bool for
-    the both-bound existence case."""
-    from . import sparql as bgp_mod
-    from .query import _lookup_ids, triple_ids_with_id_pattern
-
+    endpoints and the excluded predicates resolve in one lookup job, the
+    scan keeps its pruned projection routing, the exclusion is a residual
+    ``p NOT IN`` filter over the (few) excluded predicate ids, and only
+    result rows are translated.  Returns a bool for the both-bound
+    existence case."""
     s_var, o_var = s.startswith("?"), o.startswith("?")
-    empty = _empty_rel(kg, s, o) if s_var or o_var else False
-
-    sid, _, oid = _lookup_ids(kg, None if s_var else s, None,
-                              None if o_var else o)
-    if (not s_var and not sid) or (not o_var and not oid):
-        return empty     # bound endpoint not in the graph
-    pids = [r["id"] for r in kg.dict.predicates
-            .filter(F.col("term").isin(list(excl))).collect()] if excl else []
-    ids = triple_ids_with_id_pattern(kg, sid, None, oid)
+    ends = [(k, t) for k, t in (("s", s), ("o", o)) if not t.startswith("?")]
+    found = kg.dict.lookup(ends + [("p", t) for t in excl])
+    if any(e not in found for e in ends):
+        # bound endpoint not in the graph
+        return _empty_rel(kg, s, o) if s_var or o_var else False
+    pids = [i for (k, _), i in found.items() if k == "p"]
+    ids = triple_ids_with_id_pattern(kg, found.get(("s", s)), None,
+                                     found.get(("o", o)))
     if pids:
         ids = ids.filter(~F.col("p").isin(pids))
     if not s_var and not o_var:
         return ids.limit(1).count() > 0
-    if s_var and o_var:
-        if s == o:
-            ids = ids.filter((F.col("s") == F.col("o"))
-                             & (F.col("s") <= kg.dict.n_shared))
-            return bgp_mod._translate_vars(
-                kg, ids.select(F.col("s").alias(s[1:])), {s[1:]: "shared"})
-        return bgp_mod._translate_vars(
-            kg, ids.select(F.col("s").alias(s[1:]), F.col("o").alias(o[1:])),
-            {s[1:]: "s", o[1:]: "o"})
-    if o_var:
-        return bgp_mod._translate_vars(
-            kg, ids.select(F.col("o").alias(o[1:])), {o[1:]: "o"})
-    return bgp_mod._translate_vars(
-        kg, ids.select(F.col("s").alias(s[1:])), {s[1:]: "s"})
+    if s_var and o_var and s == o:
+        # one var at both ends: only shared ids denote one term in both
+        ids = ids.filter((F.col("s") == F.col("o"))
+                         & (F.col("s") <= kg.dict.n_shared))
+        return ids_to_strings(kg, ids.select(F.col("s").alias(s[1:])),
+                              "shared")
+    cols = {t[1:]: k for k, t in (("s", s), ("o", o)) if t.startswith("?")}
+    return ids_to_strings(
+        kg, ids.select(*[F.col(k).alias(v) for v, k in cols.items()]), cols)
 
 
 def _join_negset(kg: KG, df: DataFrame | None, s: str, ns: NegSet,

@@ -11,8 +11,12 @@ GOLDEN_N_CONV = 60
 
 @pytest.fixture(scope="session")
 def spark():
+    # a 6g heap: with the session default (16g) the JVM grows past 11 GB of
+    # resident memory over the suite on a 16 GB host before it collects,
+    # and can be killed mid-run; the whole suite passes within 6g
     s = get_spark(app_name="hdtspark-tests", master="local[8]",
-                  shuffle_partitions=8)
+                  shuffle_partitions=8,
+                  extra_conf={"spark.driver.memory": "6g"})
     yield s
     s.stop()
 

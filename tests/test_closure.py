@@ -50,6 +50,7 @@ def _tc(edges: set) -> set:
 
 E = {(_iri(a), _iri(b)) for a, b in EDGES}
 TC = _tc(E)
+E2 = {(a, d) for a, b in E for c, d in E if b == c}
 NODES = {t for s, _, o in TRIPLES for t in (s, o)}
 
 
@@ -118,7 +119,7 @@ def test_star(gkg):
 
 
 def test_composite_plus(gkg):
-    tc2 = _tc({(a, d) for a, b in E for c, d in E if b == c})
+    tc2 = _tc(E2)
     q = f"SELECT ?a ?b {{ ?a (<{P}>/<{P}>)+ ?b }}"
     assert _rows(gkg, q) == tc2
     start = _iri("start")
@@ -129,6 +130,32 @@ def test_composite_plus(gkg):
     for o in ("x", "y", "end"):
         assert _ask(gkg, f"ASK {{ <{start}> (<{P}>/<{P}>)+ <{_iri(o)}> }}") \
             == ((start, _iri(o)) in tc2)
+
+
+@pytest.mark.parametrize("node", ["start", "d", "z", "end2", "k"])
+def test_composite_opt_seeded(gkg, node):
+    """``(p/p)?`` from a bound subject, then into a bound object: the node
+    itself (zero-length arm) and its two-step neighbours.  From the
+    object-only ``end2`` a walk on colliding per-role ids would reach
+    ``start``'s neighbours."""
+    n = _iri(node)
+    path = f"(<{P}>/<{P}>)?"
+    assert _rows(gkg, f"SELECT ?x {{ <{n}> {path} ?x }}") == {(n,)} | {
+        (b,) for a, b in E2 if a == n}
+    assert _rows(gkg, f"SELECT ?x {{ ?x {path} <{n}> }}") == {(n,)} | {
+        (a,) for a, b in E2 if b == n}
+
+
+@pytest.mark.parametrize("s,o", [
+    ("start", "b"), ("start", "d"), ("x", "z"), ("z", "end"), ("d", "d"),
+    ("end2", "b"), ("end2", "d"), ("absent", "absent")])
+def test_both_bound_opt_ask(gkg, s, o):
+    """``p?`` and ``(p/p)?`` with both endpoints bound, hits and misses."""
+    s, o = _iri(s), _iri(o)
+    zero = s == o and s in NODES
+    assert _ask(gkg, f"ASK {{ <{s}> <{P}>? <{o}> }}") == (zero or (s, o) in E)
+    assert _ask(gkg, f"ASK {{ <{s}> (<{P}>/<{P}>)? <{o}> }}") == (
+        zero or (s, o) in E2)
 
 
 def test_absent_predicate_or_endpoint_is_empty(gkg):

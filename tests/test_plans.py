@@ -55,17 +55,23 @@ def test_encode_broadcasts_small_dict(kg):
 
 def test_dicts_above_broadcast_cap_use_shuffled_hash_joins(kg, monkeypatch):
     """Above the broadcast cap the dictionary sides of the encode joins and
-    of the id -> string translation get a SHUFFLE_HASH hint, never a
-    sort-merge join.  The golden KG is pushed into that regime by lowering
-    the cap (query, sparql and sparql_parser read it at call time)."""
-    from hdtspark import query
+    of every id -> string translation (patterns, BGPs, closures, single-step
+    composite paths) get a SHUFFLE_HASH hint, never a sort-merge join.  The
+    golden KG is pushed into that regime by lowering the cap (the join-side
+    rule ``encode.dict_side`` reads it at call time)."""
+    from hdtspark import query, rules, sparql
 
     monkeypatch.setattr(encode, "BROADCAST_DICT_MAX_TERMS", 10)
     # translate a filtered id set: the translation of all of kg.spo may
     # already be cached as KG.str_enum, and its cached plan would be used
     ids = kg.spo.filter(F.col("s") > 0)
+    prev = f"<{rules.P_PREV}>"
     for df in (encode.encode_triples(kg.triples_str, kg.dict),
-               query.ids_to_strings(kg, ids)):
+               query.ids_to_strings(kg, ids),
+               sparql.bgp(kg, [("?c", rules.P_HASTURN, "?t"),
+                               ("?t", rules.P_ROLE, "?r")]),
+               sparql.query(kg, f"SELECT ?a ?b {{ ?a {prev}+ ?b }}"),
+               sparql.query(kg, f"SELECT ?a ?b {{ ?a ({prev}/{prev})? ?b }}")):
         simple = _plan(df, "simple")
         assert "ShuffledHashJoin" in simple, simple
         assert "SortMergeJoin" not in simple, simple
@@ -195,7 +201,7 @@ def test_path_closure_iterates_on_ids(kg, tmp_path):
     kg_mat = replace(kg, pso=kg.pso.sparkSession.read.parquet(path))
 
     base = sparql_parser._closure_base_ids(kg_mat, pid)
-    step = sparql_parser.closure_step(base, base, base, 1, kg.dict.n_shared)
+    step = sparql_parser.closure_step(base, base, base, 1)
     # per-step schema is pure 8-byte ids
     assert all(isinstance(f.dataType, LongType) for f in step.schema.fields)
     plan = _plan(step)
@@ -260,8 +266,7 @@ def test_closure_step_broadcasts_accumulator(spark, kg, tmp_path):
     gen = base.localCheckpoint()
     n = gen.count()
 
-    simple = _plan(sparql_parser.closure_step(gen, base, gen, n,
-                                              kg.dict.n_shared), "simple")
+    simple = _plan(sparql_parser.closure_step(gen, base, gen, n), "simple")
     anti = [l for l in simple.splitlines() if "LeftAnti" in l]
     assert anti and all("BroadcastHashJoin" in l and "BuildRight" in l
                         for l in anti), simple
@@ -274,12 +279,25 @@ def test_closure_step_broadcasts_accumulator(spark, kg, tmp_path):
     key = "spark.sql.autoBroadcastJoinThreshold"
     spark.conf.set(key, "-1")
     try:
-        simple = _plan(sparql_parser.closure_step(gen, base, gen, n,
-                                                  kg.dict.n_shared), "simple")
+        simple = _plan(sparql_parser.closure_step(gen, base, gen, n),
+                       "simple")
     finally:
         spark.conf.unset(key)
     assert any("SortMergeJoin" in l and "LeftAnti" in l
                for l in simple.splitlines()), simple
+
+
+def _job_ids(spark, group: str, fn) -> list[int]:
+    """The Spark jobs ``fn`` runs, collected under their own job group
+    (broadcasts and adaptive stages run on Spark's threads but inherit the
+    group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_unbound_closure_runs_one_action_per_step(spark, kg, golden_rows):
@@ -298,20 +316,47 @@ def test_unbound_closure_runs_one_action_per_step(spark, kg, golden_rows):
     q = f"SELECT ?a ?b {{ ?a <{rules.P_PREV}>+ ?b }}"
     sparql_parser.query_df(kg, q).count()    # warm the cached projections
 
-    sc, group = spark.sparkContext, "test-closure-actions"
-    sc.setJobGroup(group, "unbound p+")
-    try:
-        sparql_parser.query_df(kg, q).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    st = sc.statusTracker()
-    jobs = st.getJobIdsForGroup(group)
+    jobs = _job_ids(spark, "test-closure-actions",
+                    lambda: sparql_parser.query_df(kg, q).count())
+    st = spark.sparkContext.statusTracker()
     # a job's own final stage has its highest stage id (parents, including
     # reused stages named after older call sites, are created first)
     finals = [st.getStageInfo(max(st.getJobInfo(j).stageIds)).name
               for j in jobs]
     actions = [n for n in finals if "withThreadLocalCaptured" not in n]
     assert steps <= len(actions) <= steps + 3, (actions, steps, len(jobs))
+
+
+def test_query_paths_job_counts(spark, kg):
+    """Spark jobs per query, counted warm, so a change that adds a round
+    trip shows: a bound pattern (one lookup job, then the scan with its
+    dictionary broadcasts), a 2-pattern BGP (one lookup job for all its
+    constants, then the join), and a negated set with a bound endpoint,
+    whose endpoint and excluded predicates resolve in ONE lookup job."""
+    from dataclasses import replace
+
+    from hdtspark import query, rules, sparql, synth
+
+    # the session KG may hold a cached string enumeration, which bound
+    # patterns would filter instead of taking the id route
+    kg = replace(kg, _str_enum=None)
+    cv = synth.conv_id_for(7)
+    turn = rules.turn_iri(cv, 0)
+    cases = {
+        "bound-pattern": (lambda: query.triples_with_pattern(
+            kg, s=turn, p=rules.P_ROLE), 5),
+        "bgp-2": (lambda: sparql.bgp(kg, [
+            (rules.conv_iri(cv), rules.P_HASTURN, "?t"),
+            ("?t", rules.P_ROLE, "?r")]), 7),
+        "negset-bound": (lambda: sparql.query(
+            kg, f"SELECT ?x {{ <{turn}> !<{rules.P_TEXT}> ?x }}"), 3),
+    }
+    got = {}
+    for name, (q, _) in cases.items():
+        assert q().collect(), name     # warm the cached projections
+        got[name] = len(_job_ids(spark, f"test-jobs-{name}",
+                                 lambda: q().collect()))
+    assert got == {k: w for k, (_, w) in cases.items()}, got
 
 
 def test_materialized_ops_scan_pushes_filters(spark, kg, tmp_path):
