@@ -86,7 +86,8 @@ def _q_bitmap_y(spark, sf_dir):
 
 
 def _q_void(spark, sf_dir):
-    return metrics.void_stats_df(_kg(spark, sf_dir).spo)
+    kg = _kg(spark, sf_dir)
+    return metrics.void_stats_df(kg.dict, kg.spo.count())
 
 
 def _pattern_query(s=None, p=None, o=None):

@@ -1,35 +1,49 @@
-"""Durable, resumable materialization of the KG pipeline.
+"""Durable, resumable KG warehouse: the one writer and the one reader.
 
 Stage-level checkpointing with manifests (the batch-idempotent analog of the
 reference's index cache, src/hdt.rs:110-193): each stage writes its output
-table to ``<warehouse>/<stage>/data`` (parquet; an Iceberg catalog slots in
-behind the same call sites when its runtime jar is present — none is in this
-sandbox), then atomically records a ``_manifest.json`` with the stage's
-input fingerprint, row count, output schema, partition lineage, and wall
-time.  Reads use the recorded schema, so serving a stage launches no
-schema-inference job.
+table to ``<warehouse>/<stage>/data`` (parquet), then atomically records a
+``_manifest.json`` with the stage's input and content fingerprints, row
+count, output schema, partition lineage, and wall time.  Reads use the
+recorded schema, so serving a stage launches no schema-inference job.
 
-Resume semantics (north rule): a rerun recomputes a stage only if its
-manifest is missing or its input fingerprint changed; otherwise the stage is
-served from its parquet output.  Writes go to a temp dir and are renamed
-into place, so a kill mid-stage never leaves a "complete" manifest behind.
+One stage chain, ``STAGES``: triples_str -> dict -> spo -> ops, pso, adj,
+metrics.  Each stage is keyed on the content fingerprint of the stage it
+derives from, and ``Materializer.write_stage`` runs a stage's builder only
+when its manifest is missing or its input fingerprint changed; otherwise
+the stage is served from its parquet output.  Writes go to a temp dir and
+are renamed into place, so a kill mid-stage never leaves a "complete"
+manifest behind.
+
+Three entry points: ``materialize_kg`` (transcripts, extracted into
+``triples_str``), ``materialize_nt`` (an N-Triples file, parsed into
+``triples_str``) and ``materialize_hdt`` (an HDT file's own ``dict`` and
+``spo``, then the chain from ``ops`` on).  All return through ``read_kg``,
+the one reader, which ``cli`` uses too.  ``metrics`` holds the VOID
+statistics, taken from the dictionary's section counts and the spo stage's
+row count (``metrics.void_stats``).
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import json
 import os
 import shutil
 import time
+from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from . import bitmap_triples, encode, extract
-from .dict_builder import FourSectDict, build_dict
+from . import encode, extract, pipeline
+from .dict_builder import SECTIONS, FourSectDict, build_dict
 from .query import KG
+from .sources import read_nt
 
 MANIFEST = "_manifest.json"
+STAGES = ("triples_str", "dict", "spo", "ops", "pso", "adj", "metrics")
 
 
 def _fp_aggs(cols: list[str]) -> list:
@@ -77,12 +91,9 @@ class Materializer:
     def _dir(self, stage: str) -> str:
         return os.path.join(self.warehouse, stage)
 
-    def _manifest_path(self, stage: str) -> str:
-        return os.path.join(self._dir(stage), MANIFEST)
-
     def read_manifest(self, stage: str) -> dict | None:
         try:
-            with open(self._manifest_path(stage)) as f:
+            with open(os.path.join(self._dir(stage), MANIFEST)) as f:
                 return json.load(f)
         except (FileNotFoundError, json.JSONDecodeError):
             return None
@@ -98,23 +109,23 @@ class Materializer:
         return (self.spark.read.schema(m["schema"])
                 .parquet(os.path.join(self._dir(stage), "data")))
 
-    def stage_complete(self, stage: str, input_fp: str) -> bool:
-        """A manifest without a schema (older layout) is incomplete, so the
-        stage rebuilds once."""
+    def write_stage(self, stage: str, build: Callable[[], DataFrame],
+                    input_fp: str, extra: dict | None = None) -> str:
+        """Idempotent write of ``build()``'s output: temp dir + rename,
+        manifest written last.  ``build`` runs only when the stage is not
+        complete for ``input_fp``; ``extra`` (manifest fields) is read after
+        it, so a builder may fill it.  Returns the stage's content
+        fingerprint, the input of the stages that chain on it."""
         m = self.read_manifest(stage)
-        return bool(m and m.get("status") == "complete" and "schema" in m
-                    and m.get("input_fingerprint") == input_fp)
-
-    def write_stage(self, stage: str, df: DataFrame, input_fp: str,
-                    extra: dict | None = None) -> StageResult:
-        """Idempotent write: temp dir + rename; manifest written last."""
-        if self.stage_complete(stage, input_fp):
-            m = self.read_manifest(stage)
-            res = StageResult(stage, True, m["rows_out"], 0)
-            self.results.append(res)
-            return res
+        # a manifest without a schema (older layout) is incomplete, so the
+        # stage rebuilds once
+        if (m and m.get("status") == "complete" and "schema" in m
+                and m.get("input_fingerprint") == input_fp):
+            self.results.append(StageResult(stage, True, m["rows_out"], 0))
+            return m["content_fingerprint"]
 
         t0 = time.monotonic()
+        df = build()
         d = self._dir(stage)
         tmp = d + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
@@ -122,8 +133,6 @@ class Materializer:
         # Content fingerprint rides the write job itself (df.observe): the
         # stage output is scanned ONCE — round 1 re-read every stage's full
         # output just to hash it, doubling the pipeline's I/O.
-        from pyspark.sql import Observation
-
         obs = Observation(f"stage:{stage}")
         data_dir = os.path.join(tmp, "data")
         df.observe(obs, *_fp_aggs(df.columns)) \
@@ -163,9 +172,8 @@ class Materializer:
             json.dump(manifest, f, separators=(",", ":"))
         shutil.rmtree(d, ignore_errors=True)
         os.rename(tmp, d)
-        res = StageResult(stage, False, rows, wall_ms)
-        self.results.append(res)
-        return res
+        self.results.append(StageResult(stage, False, rows, wall_ms))
+        return content_fp
 
     def lineage_df(self) -> DataFrame:
         """All stages' per-partition lineage as one DataFrame."""
@@ -184,103 +192,114 @@ class Materializer:
         )
 
 
-def materialize_kg(spark: SparkSession, transcripts: DataFrame,
-                   warehouse: str) -> tuple[KG, Materializer]:
-    """Run (or resume) the full pipeline, stage by stage, into ``warehouse``.
+def _read_dict(mat: Materializer) -> FourSectDict | None:
+    m = mat.read_manifest("dict")
+    if m is None:
+        return None
+    # the recorded degree bound keeps the adjacency salt decision of a
+    # resumed build identical to the first build's (no re-sampling)
+    return FourSectDict.from_sections(
+        mat.read_table("dict"), **{f"n_{s}": m[f"n_{s}"] for s in SECTIONS},
+        max_raw_subj_degree=m.get("max_raw_subj_degree"))
 
-    Stages: triples_str -> dict -> spo -> ops -> pso -> adj -> metrics.
-    Each stage's input fingerprint chains from the previous stage, so any
-    upstream change invalidates exactly the downstream stages.
-    """
-    mat = Materializer(spark, warehouse)
 
-    # Fingerprint EVERY extraction-relevant column: role/tool/ts also emit
-    # triples (P_ROLE/P_TOOL/P_TS), so a change in any of them must
-    # invalidate downstream stages, not just conv_id/turn_idx/text.
-    in_fp = fingerprint(
-        transcripts, [c for c in ["conv_id", "turn_idx", "role", "text",
-                                  "tool", "ts"] if c in transcripts.columns])
+def read_kg(mat: Materializer) -> KG | None:
+    """The warehouse's KG, every stage read with its manifest schema (no
+    Spark job), or None if the warehouse has no dict stage.  ``adj`` is
+    None in a warehouse without one (imports used to skip it)."""
+    d = _read_dict(mat)
+    if d is None:
+        return None
+    return KG(dict=d, spo=mat.read_table("spo"), ops=mat.read_table("ops"),
+              pso=mat.read_table("pso"),
+              adj=mat.read_table("adj") if mat.read_manifest("adj") else None)
 
-    if not mat.stage_complete("triples_str", in_fp):
-        tri = extract.extract_triples(transcripts)
-        mat.write_stage("triples_str", tri, in_fp)
-    else:
-        mat.write_stage("triples_str", None, in_fp)  # records the skip
+
+def _write_dict(mat: Materializer, make: Callable[[], FourSectDict],
+                input_fp: str) -> tuple[FourSectDict, str]:
+    """The dict stage of ``make()``'s dictionary; returns the dictionary as
+    read back from the stage and the stage's content fingerprint."""
+    made: list[FourSectDict] = []
+    extra: dict = {}
+
+    def build() -> DataFrame:
+        d = make()
+        made.append(d)
+        extra.update(d.counts(), max_raw_subj_degree=d.max_raw_subj_degree)
+        return d.sections_clustered()
+
+    fp = mat.write_stage("dict", build, input_fp, extra=extra)
+    # the stage is durable parquet now: release the build-time dictionary's
+    # persisted ids table and its ranked-terms input
+    for d in made:
+        d.unpersist()
+    return _read_dict(mat), fp
+
+
+def _write_derived(mat: Materializer, d: FourSectDict, spo_fp: str) -> KG:
+    """ops, pso, adj and metrics, all keyed on the spo stage's content
+    fingerprint; returns the warehouse's KG.  The adjacency's salt decision
+    follows from the dict manifest's ``max_raw_subj_degree``."""
+    from .metrics import void_stats_df
+
+    for stage, build in pipeline.derived(mat.read_table("spo"), d).items():
+        mat.write_stage(stage, build, spo_fp)
+    n = mat.read_manifest("spo")["rows_out"]
+    mat.write_stage("metrics", lambda: void_stats_df(d, n), spo_fp)
+    return read_kg(mat)
+
+
+def _write_from_triples(mat: Materializer, make: Callable[[], DataFrame],
+                        input_fp: str) -> KG:
+    """The whole chain from the (s, p, o) string triples ``make()`` gives."""
+    tri_fp = mat.write_stage("triples_str", make, input_fp)
     tri = mat.read_table("triples_str")
     # Downstream stage keys chain on the upstream stage's CONTENT
     # fingerprint (recorded at write time): rebuilding an upstream stage to
     # different bytes invalidates everything below it, while a
     # deterministic byte-identical rebuild legitimately keeps downstream
     # checkpoints.
-    tri_fp = mat.read_manifest("triples_str").get(
-        "content_fingerprint", f"{in_fp}->triples")
+    d, dict_fp = _write_dict(mat, lambda: build_dict(tri), tri_fp)
+    spo_fp = mat.write_stage("spo", lambda: encode.encode_triples(tri, d),
+                             f"{tri_fp}:{dict_fp}")
+    return _write_derived(mat, d, spo_fp)
 
-    if not mat.stage_complete("dict", tri_fp):
-        d = build_dict(tri)
-        mat.write_stage(
-            "dict", d.sections_clustered(), tri_fp,
-            extra={"n_shared": d.n_shared, "n_subjects": d.n_subjects,
-                   "n_predicates": d.n_predicates, "n_objects": d.n_objects,
-                   "max_raw_subj_degree": d.max_raw_subj_degree},
-        )
-        # The stage is now durable parquet; release the build-time dict's
-        # persisted ids table AND its ranked-terms input cache (deps) before
-        # rebinding ``d`` to the read-back sections — otherwise every cold
-        # dict-stage build leaks both for the life of the JVM (ADVICE r4:
-        # the same accumulated-cache class as the r2 3-9x regression).
-        d.unpersist()
-    else:
-        mat.write_stage("dict", None, tri_fp)
-    dict_manifest = mat.read_manifest("dict")
-    sections = mat.read_table("dict")
-    d = FourSectDict(
-        shared=sections.filter("section = 'shared'").select("term", "id"),
-        subjects=sections.filter("section = 'subjects'").select("term", "id"),
-        predicates=sections.filter("section = 'predicates'").select("term", "id"),
-        objects=sections.filter("section = 'objects'").select("term", "id"),
-        n_shared=dict_manifest["n_shared"],
-        n_subjects=dict_manifest["n_subjects"],
-        n_predicates=dict_manifest["n_predicates"],
-        n_objects=dict_manifest["n_objects"],
-        # recorded at dict-build time: resume reuses the recorded value, so
-        # the adjacency salt decision is identical across runs (no
-        # re-sampling; VERDICT r5 #6)
-        max_raw_subj_degree=dict_manifest.get("max_raw_subj_degree"),
-    )
 
-    dict_fp = tri_fp + ":" + mat.read_manifest("dict").get(
-        "content_fingerprint", "dict")
-    if not mat.stage_complete("spo", dict_fp):
-        mat.write_stage("spo", encode.encode_triples(tri, d), dict_fp)
-    else:
-        mat.write_stage("spo", None, dict_fp)
-    spo = mat.read_table("spo")
+def materialize_kg(spark: SparkSession, transcripts: DataFrame,
+                   warehouse: str) -> tuple[KG, Materializer]:
+    """Run (or resume) the full pipeline from transcripts into
+    ``warehouse``; the input fingerprint covers every column extraction
+    reads (role/tool/ts emit triples too)."""
+    in_fp = fingerprint(
+        transcripts, [c for c in ["conv_id", "turn_idx", "role", "text",
+                                  "tool", "ts"] if c in transcripts.columns])
+    mat = Materializer(spark, warehouse)
+    return _write_from_triples(
+        mat, lambda: extract.extract_triples(transcripts), in_fp), mat
 
-    spo_fp = mat.read_manifest("spo").get("content_fingerprint", f"{dict_fp}->spo")
-    bits = encode.dict_bits(d)
-    salt = bitmap_triples.salt_buckets_for(d.max_raw_subj_degree)
-    for stage, builder, extra in [
-        ("ops", lambda: encode.ops_projection(spo, bits=bits), None),
-        ("pso", lambda: encode.pso_projection(spo, bits=bits), None),
-        ("adj", lambda: bitmap_triples.adjacency(spo, salt_buckets=salt,
-                                                 bits=bits),
-         {"salt_buckets": None if salt in (None, "auto") else salt,
-          "salt_decision_from": "dict_max_raw_subj_degree"
-          if salt != "auto" else "sample_probe",
-          "max_raw_subj_degree": d.max_raw_subj_degree}),
-    ]:
-        if not mat.stage_complete(stage, spo_fp):
-            mat.write_stage(stage, builder(), spo_fp, extra=extra)
-        else:
-            mat.write_stage(stage, None, spo_fp)
 
-    if not mat.stage_complete("metrics", spo_fp):
-        from .metrics import void_stats_df
-        mat.write_stage("metrics", void_stats_df(spo), spo_fp)
-    else:
-        mat.write_stage("metrics", None, spo_fp)
+def materialize_nt(spark: SparkSession, path: str,
+                   warehouse: str) -> tuple[KG, Materializer]:
+    """An N-Triples file or directory into ``warehouse`` (the reference's
+    convert-from-nt, src/main.rs:122-133).  The input fingerprint is the
+    parsed triples' content (one scan), so a modified file at the same path
+    invalidates the stages."""
+    triples = read_nt(spark, path)
+    mat = Materializer(spark, warehouse)
+    return _write_from_triples(mat, lambda: triples,
+                               "nt:" + fingerprint(triples)), mat
 
-    kg = KG(dict=d, spo=spo, ops=mat.read_table("ops"),
-            pso=mat.read_table("pso"), adj=mat.read_table("adj"),
-            triples_str=tri)
-    return kg, mat
+
+def materialize_hdt(spark: SparkSession, path: str,
+                    warehouse: str) -> tuple[KG, Materializer]:
+    """An HDT binary file into ``warehouse``: the file's own dictionary and
+    spo (keyed on the file's md5), then the shared chain from ops on."""
+    from .hdt_binary import read_hdt_spark
+
+    with open(path, "rb") as f:
+        in_fp = "hdt:" + hashlib.md5(f.read()).hexdigest()
+    mat = Materializer(spark, warehouse)
+    read = functools.cache(lambda: read_hdt_spark(spark, path))
+    d, _ = _write_dict(mat, lambda: read().dict, in_fp)
+    spo_fp = mat.write_stage("spo", lambda: read().spo, in_fp)
+    return _write_derived(mat, d, spo_fp), mat

@@ -32,23 +32,8 @@ import sys
 
 def _load_kg(mat):
     """Warehouse stages -> KG, or None if the warehouse was never built."""
-    from .dict_builder import FourSectDict
-    from .query import KG
-
-    m = mat.read_manifest("dict")
-    if m is None:
-        return None
-    sections = mat.read_table("dict")
-    d = FourSectDict(
-        shared=sections.filter("section = 'shared'").select("term", "id"),
-        subjects=sections.filter("section = 'subjects'").select("term", "id"),
-        predicates=sections.filter("section = 'predicates'").select("term", "id"),
-        objects=sections.filter("section = 'objects'").select("term", "id"),
-        n_shared=m["n_shared"], n_subjects=m["n_subjects"],
-        n_predicates=m["n_predicates"], n_objects=m["n_objects"],
-    )
-    return KG(dict=d, spo=mat.read_table("spo"), ops=mat.read_table("ops"),
-              pso=mat.read_table("pso"))
+    from .checkpoint import read_kg
+    return read_kg(mat)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -112,26 +97,49 @@ def main(argv: list[str] | None = None) -> int:
         df.write.mode("overwrite").parquet(args.out)
         print(json.dumps({"written": args.out, "rows": spark.read.parquet(args.out).count()}))
 
-    elif args.cmd == "build":
-        from .checkpoint import materialize_kg
-        transcripts = spark.read.parquet(args.input)
-        kg, mat = materialize_kg(spark, transcripts, args.warehouse)
+    elif args.cmd in ("build", "import-nt", "import-hdt"):
+        # import-nt is the reference CLI's convert-from-.nt path
+        # (Hdt::read_nt, src/main.rs:122-133), import-hdt its HDT reader
+        from . import checkpoint
+        if args.cmd == "build":
+            _, mat = checkpoint.materialize_kg(
+                spark, spark.read.parquet(args.input), args.warehouse)
+        else:
+            write = (checkpoint.materialize_nt if args.cmd == "import-nt"
+                     else checkpoint.materialize_hdt)
+            _, mat = write(spark, args.input, args.warehouse)
         print(json.dumps({
             "stages": [{"stage": r.name, "skipped": r.skipped,
                         "rows": r.rows, "wall_ms": r.wall_ms}
                        for r in mat.results],
         }))
 
-    elif args.cmd == "query":
+    elif args.cmd == "info":
+        from .checkpoint import STAGES, Materializer
+        mat = Materializer(spark, args.warehouse)
+        out = {}
+        for stage in STAGES:
+            m = mat.read_manifest(stage)
+            if m:
+                out[stage] = {k: m[k] for k in ("rows_out", "wall_ms") if k in m}
+        if "metrics" not in out:
+            print(f"error: no metrics stage in {args.warehouse} "
+                  "(run `build` first)", file=sys.stderr)
+            spark.stop()
+            return 2
+        for r in mat.read_table("metrics").collect():
+            out[r["key"]] = r["value"]
+        print(json.dumps(out, indent=2))
+
+    else:
         from .checkpoint import Materializer
-        from .query import triples_with_pattern
         kg = _load_kg(Materializer(spark, args.warehouse))
         if kg is None:
             print(f"error: no built warehouse at {args.warehouse} "
                   "(run `build` first)", file=sys.stderr)
             spark.stop()
             return 2
-        if args.sparql:
+        if args.cmd == "query" and args.sparql:
             from .sparql import query as sparql_query
             from .sparql_parser import parse as sparql_parse
             res = sparql_query(kg, args.sparql)
@@ -152,7 +160,8 @@ def main(argv: list[str] | None = None) -> int:
             if n is not None and len(rows) > n:
                 print(f"note: output truncated to {n} rows "
                       "(pass --limit to raise)", file=sys.stderr)
-        else:
+        elif args.cmd == "query":
+            from .query import triples_with_pattern
             n = args.limit if args.limit is not None else 20
             res = triples_with_pattern(kg, args.s, args.p, args.o)
             rows = res.limit(n + 1).collect()
@@ -161,97 +170,24 @@ def main(argv: list[str] | None = None) -> int:
             if len(rows) > n:
                 print(f"note: output truncated to {n} rows "
                       "(pass --limit to raise)", file=sys.stderr)
-
-    elif args.cmd in ("export-hdt", "export-nt", "export-ttl"):
-        from .checkpoint import Materializer
-        kg = _load_kg(Materializer(spark, args.warehouse))
-        if kg is None:
-            print(f"error: no built warehouse at {args.warehouse} "
-                  "(run `build` first)", file=sys.stderr)
-            spark.stop()
-            return 2
-        if args.cmd == "export-hdt":
-            from .hdt_binary import write_hdt_file
-            write_hdt_file(kg, args.out)
-            n = kg.spo.count()
-        elif args.cmd == "export-ttl":
-            from .turtle import default_prefixes, write_ttl
-            prefixes = default_prefixes()
-            for spec in args.prefix:
-                pfx, _, iri = spec.partition("=")
-                prefixes[pfx] = iri
-            write_ttl(kg, args.out, prefixes)
-            n = kg.spo.count()
         else:
-            from .export import write_nt
-            write_nt(kg, args.out)
-            n = spark.read.text(args.out).count()
-        print(json.dumps({"written": args.out, "triples": n}))
-
-    elif args.cmd == "import-nt":
-        # The reference CLI's convert-from-.nt path (Hdt::read_nt,
-        # src/main.rs:122-133): distributed NT parse -> full dict/encode
-        # pipeline -> warehouse stages.
-        from .checkpoint import Materializer, fingerprint
-        from .pipeline import build_kg_from_triples
-        from .sources import read_nt
-        triples = read_nt(spark, args.input)
-        # Content-derived fingerprint (one line-scan job), like import-hdt's
-        # md5: a modified .nt at the SAME path must invalidate the stages —
-        # a path-only fingerprint silently kept stale warehouse data.
-        in_fp = "nt:" + fingerprint(triples)
-        kg = build_kg_from_triples(triples)
-        mat = Materializer(spark, args.warehouse)
-        mat.write_stage(
-            "dict", kg.dict.sections_clustered(), in_fp,
-            extra={"n_shared": kg.dict.n_shared,
-                   "n_subjects": kg.dict.n_subjects,
-                   "n_predicates": kg.dict.n_predicates,
-                   "n_objects": kg.dict.n_objects})
-        mat.write_stage("spo", kg.spo, in_fp)
-        mat.write_stage("ops", kg.ops, in_fp)
-        mat.write_stage("pso", kg.pso, in_fp)
-        kg.unpersist()
-        print(json.dumps({
-            "stages": [{"stage": r.name, "skipped": r.skipped,
-                        "rows": r.rows} for r in mat.results]}))
-
-    elif args.cmd == "import-hdt":
-        import hashlib
-
-        from .checkpoint import Materializer
-        from .hdt_binary import read_hdt_spark
-        kg = read_hdt_spark(spark, args.input)
-        with open(args.input, "rb") as f:
-            in_fp = "hdt:" + hashlib.md5(f.read()).hexdigest()
-        mat = Materializer(spark, args.warehouse)
-        mat.write_stage(
-            "dict", kg.dict.sections_clustered(), in_fp,
-            extra={"n_shared": kg.dict.n_shared,
-                   "n_subjects": kg.dict.n_subjects,
-                   "n_predicates": kg.dict.n_predicates,
-                   "n_objects": kg.dict.n_objects})
-        mat.write_stage("spo", kg.spo, in_fp)
-        mat.write_stage("ops", kg.ops, in_fp)
-        mat.write_stage("pso", kg.pso, in_fp)
-        print(json.dumps({
-            "stages": [{"stage": r.name, "skipped": r.skipped,
-                        "rows": r.rows} for r in mat.results]}))
-
-    elif args.cmd == "info":
-        from .checkpoint import Materializer
-        mat = Materializer(spark, args.warehouse)
-        out = {}
-        for stage in ["triples_str", "dict", "spo", "ops", "pso", "adj", "metrics"]:
-            m = mat.read_manifest(stage)
-            if m:
-                out[stage] = {k: m[k] for k in ("rows_out", "wall_ms") if k in m}
-        try:
-            for r in mat.read_table("metrics").collect():
-                out[r["key"]] = r["value"]
-        except Exception:
-            pass
-        print(json.dumps(out, indent=2))
+            if args.cmd == "export-hdt":
+                from .hdt_binary import write_hdt_file
+                write_hdt_file(kg, args.out)
+                n = kg.spo.count()
+            elif args.cmd == "export-ttl":
+                from .turtle import default_prefixes, write_ttl
+                prefixes = default_prefixes()
+                for spec in args.prefix:
+                    pfx, _, iri = spec.partition("=")
+                    prefixes[pfx] = iri
+                write_ttl(kg, args.out, prefixes)
+                n = kg.spo.count()
+            else:
+                from .export import write_nt
+                write_nt(kg, args.out)
+                n = spark.read.text(args.out).count()
+            print(json.dumps({"written": args.out, "triples": n}))
 
     spark.stop()
     return 0

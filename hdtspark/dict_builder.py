@@ -2,9 +2,9 @@
 
 Section split is the set-algebra of reference src/nt.rs:245-266 —
 shared = subjects ∩ objects, subject-only = S \\ O, object-only = O \\ S —
-expressed as semi/anti joins.  Dense 1-based IDs are assigned per section by
-global lexicographic (byte) order via ranking.dense_ids (the distributed
-zipWithIndex-equivalent), matching reference src/dict_sect_pfc.rs:351-386
+expressed as one flag aggregation.  Dense 1-based IDs are assigned per
+section by global lexicographic (byte) order via ranking.dense_ids_grouped
+(the distributed zipWithIndex-equivalent), matching reference src/dict_sect_pfc.rs:351-386
 (BTreeSet sort) + :116,126 (id = rank + 1).
 
 Global ID routing (reference src/four_sect_dict.rs:98-150): shared terms
@@ -17,10 +17,13 @@ iterate on.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .ranking import dense_ids_grouped
+
+SECTIONS = ("shared", "subjects", "predicates", "objects")
 
 
 @dataclass
@@ -48,6 +51,28 @@ class FourSectDict:
     # build input instead of a per-run sample probe (one fewer job per
     # build, and reruns/resume get byte-identical plans).
     max_raw_subj_degree: int | None = None
+
+    @classmethod
+    def from_sections(cls, sections: DataFrame, **fields) -> "FourSectDict":
+        """The dictionary of a ``(section, term, id)`` table; ``fields`` are
+        its four section counts (``counts()``) and any optional field."""
+        return cls(**{name: sections.filter(F.col("section") == name)
+                      .select("term", "id") for name in SECTIONS}, **fields)
+
+    @staticmethod
+    def section_spaces() -> Column:
+        """The id spaces (``s``, ``o``, ``p``) a term of a ``section`` row
+        belongs to, as an array column (shared terms are in both s and o)."""
+        return (F.when(F.col("section") == "shared",
+                       F.array(F.lit("s"), F.lit("o")))
+                .when(F.col("section") == "subjects", F.array(F.lit("s")))
+                .when(F.col("section") == "objects", F.array(F.lit("o")))
+                .otherwise(F.array(F.lit("p"))))
+
+    def counts(self) -> dict[str, int]:
+        """The four section counts, keyed as ``from_sections`` takes them
+        (and as the dict stage's manifest records them)."""
+        return {f"n_{name}": getattr(self, f"n_{name}") for name in SECTIONS}
 
     def unpersist(self) -> None:
         if self.ids is not None:
@@ -127,12 +152,9 @@ class FourSectDict:
 
     def sections_df(self) -> DataFrame:
         """All four sections as (section, term, id) — for tests/export."""
-        return (
-            self.shared.select(F.lit("shared").alias("section"), "term", "id")
-            .unionAll(self.subjects.select(F.lit("subjects").alias("section"), "term", "id"))
-            .unionAll(self.predicates.select(F.lit("predicates").alias("section"), "term", "id"))
-            .unionAll(self.objects.select(F.lit("objects").alias("section"), "term", "id"))
-        )
+        return reduce(DataFrame.unionAll, [
+            getattr(self, name).select(F.lit(name).alias("section"), "term", "id")
+            for name in SECTIONS])
 
     DICT_TERMS_PER_FILE = 2_000_000
 
@@ -226,20 +248,6 @@ def build_dict(triples_str: DataFrame) -> FourSectDict:
     # cache therefore stays alive until KG.unpersist() releases both
     # (tracked in ``deps``; round 1's bug was never releasing it at all).
     ids = ids.persist(StorageLevel.MEMORY_AND_DISK)
-
-    def section(name: str) -> DataFrame:
-        return ids.filter(F.col("section") == name).select("term", "id")
-
-    return FourSectDict(
-        shared=section("shared"),
-        subjects=section("subjects"),
-        predicates=section("predicates"),
-        objects=section("objects"),
-        n_shared=totals.get("shared", 0),
-        n_subjects=totals.get("subjects", 0),
-        n_predicates=totals.get("predicates", 0),
-        n_objects=totals.get("objects", 0),
-        ids=ids,
-        deps=(labeled,),
-        max_raw_subj_degree=max_sdeg,
-    )
+    return FourSectDict.from_sections(
+        ids, **{f"n_{g}": totals.get(g, 0) for g in SECTIONS},
+        ids=ids, deps=(labeled,), max_raw_subj_degree=max_sdeg)

@@ -71,15 +71,8 @@ def hashes_injective(d: FourSectDict) -> bool:
     four scans and three hash evaluations for the shared section.
     """
     if d.ids is not None:
-        sp_arr = (
-            F.when(F.col("section") == "shared",
-                   F.array(F.lit("s"), F.lit("o")))
-            .when(F.col("section") == "subjects", F.array(F.lit("s")))
-            .when(F.col("section") == "objects", F.array(F.lit("o")))
-            .otherwise(F.array(F.lit("p")))
-        )
         spaces = d.ids.select(F.xxhash64("term").alias("_h"),
-                              F.explode(sp_arr).alias("_sp"))
+                              F.explode(d.section_spaces()).alias("_sp"))
         rows = (
             spaces.groupBy("_sp")
             .agg(F.countDistinct("_h").alias("dh"), F.count("*").alias("n"))

@@ -587,8 +587,12 @@ class _BitPacker:
 
 
 def kg_stats_for_header(kg) -> dict:
-    """The header statistics (one spo agg + one dictionary agg)."""
+    """The header statistics: the VOID counts (``metrics.void_stats``),
+    plus one spo agg for the triples layers the writer checks and one
+    dictionary agg for the strings' size."""
     from pyspark.sql import functions as F
+
+    from .metrics import void_stats
 
     d = kg.dict
     row = kg.spo.agg(
@@ -600,13 +604,10 @@ def kg_stats_for_header(kg) -> dict:
     size_row = d.sections_df().agg(
         F.sum(F.octet_length("term")).alias("b")).first()
     return {
-        "num_triples": row["n"],
+        **void_stats(d, row["n"]),
         "y_n": row["y_n"],
         "max_p": row["max_p"] or 0,
         "max_o": row["max_o"] or 0,
-        "num_predicates": d.n_predicates,
-        "distinct_subjects": d.n_shared + d.n_subjects,
-        "distinct_objects": d.n_shared + d.n_objects,
         "num_shared": d.n_shared,
         "dict_size_strings": int(size_row["b"] or 0),
     }
@@ -683,24 +684,20 @@ def write_hdt_file(kg, path: str, file_iri: str | None = None) -> None:
 def kg_to_hdt_data(kg) -> HdtData:
     """Materialize the KG as in-memory HdtData (small graphs / tests; the
     file writer streams instead — write_hdt_file)."""
+    from .metrics import void_stats
+
     def section_terms(df):
         return [r["term"] for r in df.orderBy("id").toLocalIterator()]
 
     triples = [(r["s"], r["p"], r["o"]) for r in
                kg.spo.orderBy("s", "p", "o").toLocalIterator()]
     d = kg.dict
-    stats = {
-        "num_triples": len(triples),
-        "num_predicates": d.n_predicates,
-        "distinct_subjects": d.n_shared + d.n_subjects,
-        "distinct_objects": d.n_shared + d.n_objects,
-        "num_shared": d.n_shared,
-    }
+    stats = {**void_stats(d, len(triples)), "num_shared": d.n_shared}
     return HdtData(
-        shared=section_terms(kg.dict.shared),
-        subjects=section_terms(kg.dict.subjects),
-        predicates=section_terms(kg.dict.predicates),
-        objects=section_terms(kg.dict.objects),
+        shared=section_terms(d.shared),
+        subjects=section_terms(d.subjects),
+        predicates=section_terms(d.predicates),
+        objects=section_terms(d.objects),
         triples=triples,
         header_nt=build_header_nt(stats),
     )
@@ -709,30 +706,20 @@ def kg_to_hdt_data(kg) -> HdtData:
 def hdt_data_to_kg(spark, data: HdtData):
     """S1: decoded .hdt -> the same KG structure the pipeline builds
     (four-section dictionary DataFrames + SPO/OPS/PSO projections)."""
-    from . import encode
-    from .dict_builder import FourSectDict
+    from .dict_builder import SECTIONS, FourSectDict
+    from .pipeline import derived
     from .query import KG
 
-    def section_df(terms):
-        return spark.createDataFrame(
-            [(t, i + 1) for i, t in enumerate(terms)] or [("", 0)],
-            "term string, id long",
-        ).filter("id > 0")
-
-    d = FourSectDict(
-        shared=section_df(data.shared),
-        subjects=section_df(data.subjects),
-        predicates=section_df(data.predicates),
-        objects=section_df(data.objects),
-        n_shared=len(data.shared),
-        n_subjects=len(data.subjects),
-        n_predicates=len(data.predicates),
-        n_objects=len(data.objects),
-    )
+    rows = [(name, t, i + 1) for name in SECTIONS
+            for i, t in enumerate(getattr(data, name))]
+    d = FourSectDict.from_sections(
+        spark.createDataFrame(rows or [("", "", 0)],
+                              "section string, term string, id long"),
+        **{f"n_{name}": len(getattr(data, name)) for name in SECTIONS})
     spo = spark.createDataFrame(data.triples or [(0, 0, 0)],
                                 "s long, p long, o long").filter("s > 0")
-    return KG(dict=d, spo=spo, ops=encode.ops_projection(spo, bits=encode.dict_bits(d)),
-              pso=encode.pso_projection(spo, bits=encode.dict_bits(d)))
+    built = derived(spo, d)
+    return KG(dict=d, spo=spo, ops=built["ops"](), pso=built["pso"]())
 
 
 def read_hdt_spark(spark, path: str):

@@ -2,24 +2,26 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
+
+from .dict_builder import FourSectDict
 
 
-def void_stats(spo: DataFrame) -> dict[str, int]:
-    """numTriples / distinct subjects / distinct objects / numProperties —
-    one aggregation pass (map-side partial aggregation)."""
-    row = spo.agg(
-        F.count("*").alias("num_triples"),
-        F.countDistinct("s").alias("distinct_subjects"),
-        F.countDistinct("o").alias("distinct_objects"),
-        F.countDistinct("p").alias("num_predicates"),
-    ).first()
-    return {k: int(row[k]) for k in
-            ("num_triples", "distinct_subjects", "distinct_objects", "num_predicates")}
+def void_stats(d: FourSectDict, num_triples: int) -> dict[str, int]:
+    """numTriples / distinct subjects / distinct objects / numProperties.
+
+    The dictionary of a graph holds exactly the graph's terms, one id per
+    role (shared terms count as both subject and object), so its section
+    counts are the distinct counts — no aggregation over the triples.
+    ``num_triples`` is the distinct triple count: the spo stage's observed
+    ``rows_out``, or ``spo.count()`` in memory."""
+    return {"num_triples": int(num_triples),
+            "distinct_subjects": d.n_shared + d.n_subjects,
+            "distinct_objects": d.n_shared + d.n_objects,
+            "num_predicates": d.n_predicates}
 
 
-def void_stats_df(spo: DataFrame) -> DataFrame:
-    stats = void_stats(spo)
-    return spo.sparkSession.createDataFrame(
-        sorted(stats.items()), "key string, value long"
-    )
+def void_stats_df(d: FourSectDict, num_triples: int) -> DataFrame:
+    """``void_stats`` as a (key, value) table, keys sorted."""
+    return d.shared.sparkSession.createDataFrame(
+        sorted(void_stats(d, num_triples).items()), "key string, value long")

@@ -6,10 +6,12 @@ checkpoints/resume lives in checkpoint.py.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 
 from . import bitmap_triples, encode, extract
-from .dict_builder import build_dict
+from .dict_builder import FourSectDict, build_dict
 from .query import KG
 
 
@@ -50,24 +52,35 @@ def build_kg_from_triples(triples_str: DataFrame, cache: bool = True,
                                 deps_out=deps if cache else None)
     if cache:
         spo = spo.cache()
-    bits = encode.dict_bits(d)
-    ops = encode.ops_projection(spo, bits=bits)
-    pso = encode.pso_projection(spo, bits=bits)
+    built = derived(spo, d)
+    ops, pso = built["ops"](), built["pso"]()
     if cache_projections:
         # Opt-in for query-heavy sessions: uncached, every ??O/?PO/?P? query
         # re-shuffles spo.  Off by default — storing two full projections
         # adds real memory churn to build-only workloads.  (The durable
         # path materializes them as parquet instead — checkpoint.py.)
         ops, pso = ops.cache(), pso.cache()
-    # Salt decision from the dict build's free degree statistic — no
-    # sample-probe job, and deterministic across reruns.
-    adj = (bitmap_triples.adjacency(
-        spo, salt_buckets=bitmap_triples.salt_buckets_for(
-            d.max_raw_subj_degree), bits=bits)
-        if with_adjacency else None)
+    adj = built["adj"]() if with_adjacency else None
 
     return KG(dict=d, spo=spo, ops=ops, pso=pso, adj=adj,
               triples_str=triples_str, build_deps=tuple(deps))
+
+
+def derived(spo: DataFrame, d: FourSectDict
+            ) -> dict[str, Callable[[], DataFrame]]:
+    """The structures derived from spo, as zero-argument builders: the OPS
+    and PSO projections and the Bitmap-Triples adjacency.  Bit widths come
+    from the dictionary's counts; the salt decision from the dict build's
+    free degree bound — no sample-probe job, and deterministic across
+    reruns."""
+    bits = encode.dict_bits(d)
+    salt = bitmap_triples.salt_buckets_for(d.max_raw_subj_degree)
+    return {
+        "ops": lambda: encode.ops_projection(spo, bits=bits),
+        "pso": lambda: encode.pso_projection(spo, bits=bits),
+        "adj": lambda: bitmap_triples.adjacency(spo, salt_buckets=salt,
+                                                bits=bits),
+    }
 
 
 def materialize(kg: KG) -> int:

@@ -129,26 +129,6 @@ def _offsets_df(spark, counts, key_fields: str):
                                  key_fields + ", _off long"), acc
 
 
-def dense_ids(df: DataFrame, col: str, num_partitions: int | None = None,
-              id_col: str = "id") -> DataFrame:
-    """(col) -> (col, id_col) with id = 1 + rank in global binary sort order.
-
-    ``df`` must have distinct, non-null values of ``col``.
-    """
-    spark = df.sparkSession
-    wb = df.select(col, range_bucket(df, [col], num_partitions).alias("_b"))
-    counts = sorted(
-        (r["_b"], r["_cnt"]) for r in
-        wb.groupBy("_b").agg(F.count("*").alias("_cnt")).collect())
-    offsets, _ = _offsets_df(spark, [((b,), c) for b, c in counts], "_b int")
-    w = Window.partitionBy("_b").orderBy(col)
-    return (
-        wb.withColumn("_rn", F.row_number().over(w).cast("long"))
-        .join(F.broadcast(offsets), "_b")
-        .select(col, (F.col("_off") + F.col("_rn")).alias(id_col))
-    )
-
-
 def dense_ids_grouped(df: DataFrame, group_col: str, col: str,
                       num_partitions: int | None = None,
                       id_col: str = "id",
@@ -218,7 +198,7 @@ def cumulative_sum(df: DataFrame, order_cols: list[str], weight_col: str,
                    out_col: str = "cum", num_partitions: int | None = None) -> DataFrame:
     """Exclusive prefix sum of ``weight_col`` in global ``order_cols`` order.
 
-    Same bucketed pattern as dense_ids (per-bucket totals broadcast back +
+    Same bucketed pattern as dense_ids_grouped (per-bucket totals broadcast back +
     an in-bucket running window) — never a single-partition global window.
     Returns df's columns plus ``out_col``.
     """

@@ -32,6 +32,17 @@ def golden_oracle(golden_rows):
 
 
 @pytest.fixture(scope="session")
+def golden_void(golden_oracle):
+    """The golden graph's VOID statistics, counted in plain Python over the
+    oracle's id triples (independent of the engine's dictionary)."""
+    spo = set(golden_oracle.spo)
+    return {"num_triples": len(spo),
+            "distinct_subjects": len({s for s, _, _ in spo}),
+            "distinct_objects": len({o for _, _, o in spo}),
+            "num_predicates": len({p for _, p, _ in spo})}
+
+
+@pytest.fixture(scope="session")
 def transcripts(spark, golden_rows):
     return spark.createDataFrame(golden_rows, synth.TRANSCRIPTS_SCHEMA).cache()
 

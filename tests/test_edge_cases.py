@@ -85,8 +85,10 @@ def test_ranking_empty_inputs(spark):
     not FIELD_STRUCT_LENGTH_MISMATCH (r2 regression)."""
     from hdtspark import ranking
 
-    empty = spark.createDataFrame([], "term string")
-    assert ranking.dense_ids(empty, "term", num_partitions=4).count() == 0
+    empty = spark.createDataFrame([], "section string, term string")
+    ids, totals = ranking.dense_ids_grouped(empty, "section", "term",
+                                            num_partitions=4)
+    assert ids.count() == 0 and totals == {}
 
     empty_w = spark.createDataFrame([], "s long, np long")
     out = ranking.cumulative_sum(empty_w, ["s"], "np", out_col="cum")

@@ -20,9 +20,12 @@ def _plan(df, mode: str = "formatted") -> str:
 
 
 def test_dense_ids_plan_is_jvm_only(spark):
+    """The grouped dense-id ranking the dictionary build runs."""
     terms = spark.createDataFrame(
-        [(f"term-{i:05d}",) for i in range(3000)], "term string")
-    out = ranking.dense_ids(terms, "term", num_partitions=8)
+        [(("a", "b")[i % 2], f"term-{i:05d}") for i in range(3000)],
+        "section string, term string")
+    out, _ = ranking.dense_ids_grouped(terms, "section", "term",
+                                       num_partitions=8)
     plan = _plan(out)
     # no Python/Arrow stage anywhere in the ranking path
     for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
@@ -148,7 +151,7 @@ def test_dict_term_lookup_prunes_materialized_scan(spark, kg, tmp_path):
 
     wh = str(tmp_path / "wh")
     mat = Materializer(spark, wh)
-    mat.write_stage("dict", kg.dict.sections_clustered(num_files=8),
+    mat.write_stage("dict", lambda: kg.dict.sections_clustered(num_files=8),
                     "plan-test")
     dict_df = mat.read_table("dict")
     term = kg.dict.predicates.orderBy("id").first()["term"]
@@ -368,3 +371,18 @@ def test_materialized_ops_scan_pushes_filters(spark, kg, tmp_path):
     assert "EqualTo(o,42)" in plan and "EqualTo(p,3)" in plan, plan
     # column pruning: the scan reads only the three id columns
     assert "ReadSchema: struct<o:bigint,p:bigint,s:bigint>" in plan, plan
+
+
+def test_durable_build_job_count(spark, transcripts, tmp_path):
+    """A golden durable build into a fresh warehouse runs a fixed number of
+    Spark jobs, counted under a job group; a change that adds a round trip
+    to the build (or a stage that recomputes what the manifests know)
+    shows here."""
+    from hdtspark import checkpoint
+
+    wh = str(tmp_path / "wh")
+    jobs = _job_ids(spark, "test-durable-build",
+                    lambda: checkpoint.materialize_kg(spark, transcripts, wh))
+    # the metrics stage writes the dictionary's VOID counts and runs no
+    # aggregation of its own
+    assert len(jobs) == 35, len(jobs)

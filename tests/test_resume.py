@@ -12,10 +12,15 @@ def _spo_set(kg):
     return {tuple(r) for r in kg.spo.collect()}
 
 
-def test_materialize_matches_inmemory(spark, transcripts, kg, tmp_path):
+def test_materialize_matches_inmemory(spark, transcripts, kg, golden_void,
+                                     tmp_path):
     mkg, mat = checkpoint.materialize_kg(spark, transcripts, str(tmp_path / "wh"))
     assert _spo_set(mkg) == _spo_set(kg)
+    assert [r.name for r in mat.results] == list(checkpoint.STAGES)
     assert [r.skipped for r in mat.results] == [False] * 7
+    # the metrics stage's VOID statistics equal plain-Python counts
+    assert {r["key"]: r["value"] for r in
+            mat.read_table("metrics").collect()} == golden_void
 
 
 def test_cli_build(spark, transcripts, kg, tmp_path, run_cli):

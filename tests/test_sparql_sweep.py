@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import pytest
 
-from hdtspark import rules, sparql
+from hdtspark import rules, sparql, synth
 
 M = rules.P_MENTIONS
 T = rules.P_TYPE
@@ -26,6 +26,19 @@ ENT = rules.C_ENTITY
 SPARK_E = rules.ent_iri("apache-spark")
 SQL_E = rules.ent_iri("sql-table")
 BASE = rules.BASE
+# a golden turn with 9 triples: five mentions, a role, a text and two
+# typed literals (an xsd:integer index and an xsd:dateTime)
+TURN7 = rules.turn_iri(synth.conv_id_for(7), 0)
+
+
+def _nonempty(expected):
+    """An expectation that must not be empty: a case whose constant names
+    no golden node would pass against any engine and test nothing."""
+    def check(o):
+        want = expected(o)
+        assert want, "empty expected set"
+        return want
+    return check
 
 
 def _mentions(o):
@@ -146,12 +159,12 @@ SWEEP = [
      lambda o: {t for t in map(lambda x: (x[2], x[1], x[0]), o.spo_str())}),
     ("s_free", f"SELECT ?x {{ ?x <{M}> <{SPARK_E}> }}",
      lambda o: {(s,) for s, _, oo in _mentions(o) if oo == SPARK_E}),
-    ("o_free", f"SELECT ?x {{ <{BASE}/conv/conv-7/t/0> <{M}> ?x }}",
-     lambda o: {(oo,) for s, _, oo in _mentions(o)
-                if s == f"{BASE}/conv/conv-7/t/0"}),
-    ("p_free", f"SELECT ?x {{ <{BASE}/conv/conv-7/t/0> ?x <{SPARK_E}> }}",
-     lambda o: {(p,) for _, p, _ in
-                o.pattern(f"{BASE}/conv/conv-7/t/0", None, SPARK_E)}),
+    ("o_free", f"SELECT ?x {{ <{TURN7}> <{M}> ?x }}",
+     _nonempty(lambda o: {(oo,) for s, _, oo in _mentions(o)
+                          if s == TURN7})),
+    ("p_free", f"SELECT ?x {{ <{TURN7}> ?x <{SPARK_E}> }}",
+     _nonempty(lambda o: {(p,) for _, p, _ in
+                          o.pattern(TURN7, None, SPARK_E)})),
     ("two_pattern_join",
      f"SELECT ?t ?e {{ ?t <{M}> ?e . ?e <{T}> <{ENT}> }}",
      lambda o: {(e, t) for t, _, e in _mentions(o)}),
@@ -458,9 +471,9 @@ SWEEP = [
      lambda o: ({(s, oo) for s, p, oo in o.spo_str() if p != M}
                 | {(oo, s) for s, p, oo in o.spo_str() if p != M})),
     ("path_negset_bound_s",
-     f"SELECT ?x {{ <{BASE}/conv/conv-7/t/0> !<{rules.P_TEXT}> ?x }}",
-     lambda o: {(oo,) for s, p, oo in o.spo_str()
-                if s == f"{BASE}/conv/conv-7/t/0" and p != rules.P_TEXT}),
+     f"SELECT ?x {{ <{TURN7}> !<{rules.P_TEXT}> ?x }}",
+     _nonempty(lambda o: {(oo,) for s, p, oo in o.spo_str()
+                          if s == TURN7 and p != rules.P_TEXT})),
     # closure over a composite inner: (prev/prev)+ = even-length chains
     ("path_composite_plus",
      f"SELECT ?a ?b {{ ?a (<{rules.P_PREV}>/<{rules.P_PREV}>)+ ?b }}",
@@ -529,22 +542,22 @@ SWEEP = [
      f"SELECT ?r {{ ?t <{ROLE}> ?r "
      f"FILTER (DATATYPE(?r) = <http://www.w3.org/2001/XMLSchema#string>) }}",
      lambda o: {(r,) for _, _, r in _roles(o)}),
-    ("f_isliteral", f"SELECT ?o {{ <{BASE}/conv/conv-7/t/0> ?p ?o "
+    ("f_isliteral", f"SELECT ?o {{ <{TURN7}> ?p ?o "
      f"FILTER (isLiteral(?o)) }}",
-     lambda o: {(oo,) for s, _, oo in o.spo_str()
-                if s == f"{BASE}/conv/conv-7/t/0" and oo.startswith('"')}),
-    ("f_isiri", f"SELECT ?o {{ <{BASE}/conv/conv-7/t/0> ?p ?o "
+     _nonempty(lambda o: {(oo,) for s, _, oo in o.spo_str()
+                          if s == TURN7 and oo.startswith('"')})),
+    ("f_isiri", f"SELECT ?o {{ <{TURN7}> ?p ?o "
      f"FILTER (isIRI(?o)) }}",
-     lambda o: {(oo,) for s, _, oo in o.spo_str()
-                if s == f"{BASE}/conv/conv-7/t/0"
-                and not oo.startswith('"') and not oo.startswith("_:")}),
+     _nonempty(lambda o: {(oo,) for s, _, oo in o.spo_str()
+                          if s == TURN7
+                          and not oo.startswith('"') and not oo.startswith("_:")})),
     ("f_isblank_ask", f"ASK {{ ?s ?p ?o FILTER (isBlank(?o)) }}",
      lambda o: {(any(oo.startswith("_:") for _, _, oo in o.spo_str()),)}),
-    ("f_isnumeric", f"SELECT ?o {{ <{BASE}/conv/conv-7/t/0> ?p ?o "
+    ("f_isnumeric", f"SELECT ?o {{ <{TURN7}> ?p ?o "
      f"FILTER (isNumeric(?o)) }}",
-     lambda o: {(oo,) for s, _, oo in o.spo_str()
-                if s == f"{BASE}/conv/conv-7/t/0"
-                and oo.endswith(f"^^<{rules.XSD_INTEGER}>")}),
+     _nonempty(lambda o: {(oo,) for s, _, oo in o.spo_str()
+                          if s == TURN7
+                          and oo.endswith(f"^^<{rules.XSD_INTEGER}>")})),
     ("f_sameterm", f"SELECT ?t {{ ?t <{M}> ?e "
      f"FILTER (sameTerm(?e, <{SPARK_E}>)) }}",
      lambda o: {(s,) for s, _, oo in _mentions(o) if oo == SPARK_E}),
