@@ -83,8 +83,9 @@ class StageResult:
 class Materializer:
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
+        # the directory is made by the first stage write, so a read-only
+        # command on a mistyped path leaves nothing behind
         self.warehouse = warehouse
-        os.makedirs(warehouse, exist_ok=True)
         self.results: list[StageResult] = []
 
     # -- storage primitives -------------------------------------------------
@@ -129,6 +130,7 @@ class Materializer:
         d = self._dir(stage)
         tmp = d + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(self.warehouse, exist_ok=True)
 
         # Content fingerprint rides the write job itself (df.observe): the
         # stage output is scanned ONCE — round 1 re-read every stage's full
@@ -297,7 +299,7 @@ def materialize_hdt(spark: SparkSession, path: str,
     from .hdt_binary import read_hdt_spark
 
     with open(path, "rb") as f:
-        in_fp = "hdt:" + hashlib.md5(f.read()).hexdigest()
+        in_fp = "hdt:" + hashlib.file_digest(f, "md5").hexdigest()
     mat = Materializer(spark, warehouse)
     read = functools.cache(lambda: read_hdt_spark(spark, path))
     d, _ = _write_dict(mat, lambda: read().dict, in_fp)

@@ -36,10 +36,11 @@ class FourSectDict:
     n_subjects: int
     n_predicates: int
     n_objects: int
-    # the persisted (section, term, id) table all four sections filter from —
-    # kept so KG.unpersist() can release it (r2's documents-build regression
-    # was persists accumulating across builds in one JVM)
-    ids: DataFrame | None = None
+    # the (section, term, id) table all four sections filter from (persisted
+    # by a build, a parquet read in a warehouse): ``lookup`` scans it once,
+    # and KG.unpersist() releases it (r2's documents-build regression was
+    # persists accumulating across builds in one JVM)
+    ids: DataFrame
     # persisted upstream intermediates (the ranked-terms input) released
     # together with ids — kept cached so the dict build needs NO eager
     # materialization job of its own (ids materializes inside the first
@@ -54,10 +55,12 @@ class FourSectDict:
 
     @classmethod
     def from_sections(cls, sections: DataFrame, **fields) -> "FourSectDict":
-        """The dictionary of a ``(section, term, id)`` table; ``fields`` are
-        its four section counts (``counts()``) and any optional field."""
+        """The dictionary of a ``(section, term, id)`` table, kept as ``ids``;
+        ``fields`` are its four section counts (``counts()``) and any
+        optional field."""
         return cls(**{name: sections.filter(F.col("section") == name)
-                      .select("term", "id") for name in SECTIONS}, **fields)
+                      .select("term", "id") for name in SECTIONS},
+                   ids=sections, **fields)
 
     @staticmethod
     def section_spaces() -> Column:
@@ -75,31 +78,34 @@ class FourSectDict:
         return {f"n_{name}": getattr(self, f"n_{name}") for name in SECTIONS}
 
     def unpersist(self) -> None:
-        if self.ids is not None:
-            self.ids.unpersist()
+        self.ids.unpersist()
         for df in self.deps:
             df.unpersist()
+
+    def offsets(self, name: str) -> dict[str, int]:
+        """The sections an id space covers, each with the offset its
+        section-local ids take in the space.
+
+        ``s``/``o``: the per-role subject/object spaces (shared ids valid in
+        both); ``p``: predicates; ``shared``: ids <= n_shared; ``node``: the
+        global node space of path closures (see ``node_global_expr``)."""
+        n = self.n_shared
+        return {"s": {"shared": 0, "subjects": n},
+                "o": {"shared": 0, "objects": n},
+                "p": {"predicates": 0},
+                "shared": {"shared": 0},
+                "node": {"shared": 0, "subjects": n,
+                         "objects": n + self.n_subjects}}[name]
 
     @property
     def subj_global(self) -> DataFrame:
         """(term, id) over the full subject ID space 1..n_shared+n_subj."""
-        return self.shared.unionAll(
-            self.subjects.select("term", (F.col("id") + self.n_shared).alias("id"))
-        )
+        return self.space("s")[0]
 
     @property
     def obj_global(self) -> DataFrame:
         """(term, id) over the full object ID space 1..n_shared+n_obj."""
-        return self.shared.unionAll(
-            self.objects.select("term", (F.col("id") + self.n_shared).alias("id"))
-        )
-
-    @property
-    def node_global(self) -> DataFrame:
-        """(term, id) over the global node-ID space: the subject space,
-        then object-only terms shifted past it (see ``node_global_expr``)."""
-        return self.subj_global.unionAll(self.objects.select(
-            "term", (F.col("id") + self.n_shared + self.n_subjects).alias("id")))
+        return self.space("o")[0]
 
     def node_global_expr(self, col: str, space: str) -> Column:
         """Map an s-/o-/shared-space id column to the global node-ID space.
@@ -115,40 +121,35 @@ class FourSectDict:
                 .otherwise(F.col(col) + self.n_subjects))
 
     def space(self, name: str) -> tuple[DataFrame, int]:
-        """The (term, id) table of an id space and its exact term count.
-
-        ``s``/``o``: the per-role subject/object spaces (shared ids valid in
-        both); ``p``: predicates; ``shared``: ids <= n_shared; ``node``: the
-        global node space of path closures."""
-        n_s = self.n_shared + self.n_subjects
-        if name == "s":
-            return self.subj_global, n_s
-        if name == "o":
-            return self.obj_global, self.n_shared + self.n_objects
-        if name == "p":
-            return self.predicates, self.n_predicates
-        if name == "shared":
-            return self.shared, self.n_shared
-        assert name == "node", name
-        return self.node_global, n_s + self.n_objects
+        """The (term, id) table of an id space (``offsets``) and its exact
+        term count."""
+        offs = self.offsets(name)
+        parts = [getattr(self, sec) if off == 0 else getattr(self, sec)
+                 .select("term", (F.col("id") + off).alias("id"))
+                 for sec, off in offs.items()]
+        return (reduce(DataFrame.unionAll, parts),
+                sum(getattr(self, f"n_{sec}") for sec in offs))
 
     def lookup(self, pairs) -> dict[tuple[str, str], int]:
-        """(space, term) pairs -> ids in ONE Spark job (a union of one
-        point-filter per space), the set form of the reference's
-        ``string_to_id`` (src/four_sect_dict.rs:98-150).  Absent pairs are
-        missing from the result; no pairs, no job."""
-        want: dict[str, set[str]] = {}
+        """(space, term) pairs -> ids in ONE Spark job, the set form of the
+        reference's ``string_to_id`` (src/four_sect_dict.rs:98-150): one
+        filter over ``ids`` on the terms and on the sections the spaces
+        cover (so a clustered parquet dictionary prunes on both), then each
+        row's section-local id is shifted into every requested space that
+        covers its section (``offsets``).  Absent pairs are missing from
+        the result; no pairs, no job."""
+        spaces: dict[str, set[str]] = {}
         for sp, term in pairs:
-            want.setdefault(sp, set()).add(term)
-        parts = [self.space(sp)[0].filter(F.col("term").isin(sorted(terms)))
-                 .select(F.lit(sp).alias("k"), "term", "id")
-                 for sp, terms in want.items()]
-        if not parts:
+            spaces.setdefault(term, set()).add(sp)
+        if not spaces:
             return {}
-        u = parts[0]
-        for df in parts[1:]:
-            u = u.unionAll(df)
-        return {(r["k"], r["term"]): r["id"] for r in u.collect()}
+        offs = {sp: self.offsets(sp) for sps in spaces.values() for sp in sps}
+        sections = sorted({sec for o in offs.values() for sec in o})
+        rows = self.ids.filter(F.col("section").isin(sections)
+                               & F.col("term").isin(sorted(spaces))).collect()
+        return {(sp, r["term"]): r["id"] + offs[sp][r["section"]]
+                for r in rows for sp in spaces[r["term"]]
+                if r["section"] in offs[sp]}
 
     def sections_df(self) -> DataFrame:
         """All four sections as (section, term, id) — for tests/export."""
@@ -250,4 +251,4 @@ def build_dict(triples_str: DataFrame) -> FourSectDict:
     ids = ids.persist(StorageLevel.MEMORY_AND_DISK)
     return FourSectDict.from_sections(
         ids, **{f"n_{g}": totals.get(g, 0) for g in SECTIONS},
-        ids=ids, deps=(labeled,), max_raw_subj_degree=max_sdeg)
+        deps=(labeled,), max_raw_subj_degree=max_sdeg)

@@ -65,29 +65,14 @@ def hashes_injective(d: FourSectDict) -> bool:
     terms the collision odds are ~n²/2⁶⁵ ≈ 10⁻⁶; at 10⁹ terms ~3%, which
     is why the check exists rather than trusting the hash blindly.
 
-    When the dict's single (section, term, id) table is available it is
-    scanned ONCE (hash each term once, explode section -> space
-    memberships); the three space unions each re-filtered that cache —
-    four scans and three hash evaluations for the shared section.
+    The dict's single (section, term, id) table is scanned ONCE: each term
+    is hashed once and exploded into its section's space memberships.
     """
-    if d.ids is not None:
-        spaces = d.ids.select(F.xxhash64("term").alias("_h"),
-                              F.explode(d.section_spaces()).alias("_sp"))
-        rows = (
-            spaces.groupBy("_sp")
-            .agg(F.countDistinct("_h").alias("dh"), F.count("*").alias("n"))
-            .collect()
-        )
-        return all(r["dh"] == r["n"] for r in rows)
-    spaces = (
-        d.subj_global.select(F.lit("s").alias("_sp"), "term")
-        .unionAll(d.obj_global.select(F.lit("o").alias("_sp"), "term"))
-        .unionAll(d.predicates.select(F.lit("p").alias("_sp"), "term"))
-    )
+    spaces = d.ids.select(F.xxhash64("term").alias("_h"),
+                          F.explode(d.section_spaces()).alias("_sp"))
     rows = (
         spaces.groupBy("_sp")
-        .agg(F.countDistinct(F.xxhash64("term")).alias("dh"),
-             F.count("*").alias("n"))
+        .agg(F.countDistinct("_h").alias("dh"), F.count("*").alias("n"))
         .collect()
     )
     return all(r["dh"] == r["n"] for r in rows)

@@ -13,11 +13,14 @@ whose sort order makes the filter a pruned scan:
                                  tree, predicate_iter.rs)
     none bound        -> SPO full scan (reference SubjectIter::new)
 
-Results are translated back to strings by ``ids_to_strings``, the one id
+As in the reference, a bound position echoes the caller's constant (a
+literal column: ``lookup`` matched it by byte equality) and only the free
+positions are translated back to strings, by ``ids_to_strings``, the one id
 -> term translator of every query path (patterns, BGPs, negated sets and
 path closures): dictionary joins, the set-based analog of the reference's
 per-position TripleCache (src/hdt.rs:349-384).  Constants resolve through
-``FourSectDict.lookup``, the one constant lookup.
+``FourSectDict.lookup``, the one constant lookup: one filtered scan of the
+dictionary's (section, term, id) table for all of a query's constants.
 """
 
 from __future__ import annotations
@@ -140,21 +143,20 @@ def ids_to_strings(kg: KG, ids: DataFrame,
     return out.select(*[F.col(f"_t_{c}").alias(c) for c in ids.columns])
 
 
-def _empty_str_triples(kg: KG) -> DataFrame:
-    return kg.spo.sparkSession.createDataFrame(
-        [], "s string, p string, o string")
-
-
 def triples_with_pattern(kg: KG, s: str | None = None, p: str | None = None,
                          o: str | None = None) -> DataFrame:
     """String-level pattern query — the reference's main public API.
 
     Scale-safe routing (reference src/hdt.rs:266-314): any BOUND position
-    compiles to the ID path — constant lookup, pruned projection scan
-    (``triple_ids_with_pattern``), then string translation of only the
-    RESULT rows (``ids_to_strings``).  A cold selective query therefore
-    never materializes anything dataset-sized: the reference answers SP?
-    with a binary search + pruned walk, and this is its Spark analog.
+    compiles to the ID path — all constants resolved in one dictionary scan,
+    a pruned projection scan (``triple_ids_with_pattern``), then string
+    translation of only the FREE positions of the RESULT rows
+    (``ids_to_strings``).  Bound positions echo the caller's constant, as
+    the reference's ``triples_with_pattern`` does: the constant is
+    byte-equal to the dictionary term ``lookup`` matched.  A cold selective
+    query therefore never materializes anything dataset-sized: the
+    reference answers SP? with a binary search + pruned walk, and this is
+    its Spark analog.
 
     The full string enumeration (``KG.str_enum``) is built only for the
     unbound ``???`` scan (inherently dataset-sized) — and if an earlier
@@ -164,16 +166,22 @@ def triples_with_pattern(kg: KG, s: str | None = None, p: str | None = None,
     """
     if s is None and p is None and o is None:
         return kg.str_enum()
+    bound = {"s": s, "p": p, "o": o}
     if kg._str_enum is not None:
         df = kg._str_enum
-        for col, v in (("s", s), ("p", p), ("o", o)):
+        for col, v in bound.items():
             if v is not None:
                 df = df.filter(F.col(col) == v)
         return df
     ids = triple_ids_with_pattern(kg, s, p, o)
-    if ids is None:  # unknown constant: provably empty, no scan launched
-        return _empty_str_triples(kg)
-    return ids_to_strings(kg, ids)
+    if ids is None:
+        # unknown constant: provably empty; Spark plans a zero-row limit as
+        # an empty local relation, so no scan or translation job runs
+        ids = kg.spo.limit(0)
+    free = ids_to_strings(kg, ids.select(*[c for c, v in bound.items()
+                                           if v is None]))
+    return free.select(*[F.col(c) if v is None else F.lit(v).alias(c)
+                         for c, v in bound.items()])
 
 
 def triples_matching(kg: KG, s_terms: list[str] | None = None,

@@ -1,5 +1,5 @@
-"""The CLI's warehouse paths: HDT and N-Triples import, `info`, and reruns,
-all through ``checkpoint``'s one stage chain."""
+"""The CLI's warehouse paths: HDT and N-Triples import, `info`, reruns and
+missing warehouses, all through ``checkpoint``'s one stage chain."""
 
 from __future__ import annotations
 
@@ -37,6 +37,12 @@ def test_hdt_export_import_query(built_wh, golden_oracle, run_cli, capsys,
     stages = json.loads(_run(run_cli, capsys, [
         "import-hdt", "--input", hdt, "--warehouse", wh]))["stages"]
     assert [s["stage"] for s in stages] == list(checkpoint.STAGES[1:])
+    assert not any(s["skipped"] for s in stages)
+    # the file's md5 keys the stages: importing it again skips every one
+    again = json.loads(_run(run_cli, capsys, [
+        "import-hdt", "--input", hdt, "--warehouse", wh]))["stages"]
+    assert [s["stage"] for s in again] == list(checkpoint.STAGES[1:])
+    assert all(s["skipped"] for s in again), again
 
     def query(warehouse: str) -> list[str]:
         return sorted(_run(run_cli, capsys, [
@@ -73,3 +79,13 @@ def test_info_and_import_nt_rerun(built_wh, golden_void, run_cli, capsys,
         "import-nt", "--input", nt, "--warehouse", wh]))["stages"]
     assert [s["stage"] for s in again] == list(checkpoint.STAGES)
     assert all(s["skipped"] for s in again), again
+
+
+@pytest.mark.parametrize("argv", [["query", "-s", TURN7], ["info"]])
+def test_missing_warehouse_is_left_absent(run_cli, capsys, tmp_path, argv):
+    """A read-only command on a missing warehouse exits 2 with an error and
+    creates no directory there."""
+    wh = tmp_path / "no-such-wh"
+    assert run_cli([argv[0], "--warehouse", str(wh), *argv[1:]]) == 2
+    assert "error:" in capsys.readouterr().err
+    assert not wh.exists()

@@ -164,13 +164,20 @@ def test_hash_collision_fallback_produces_identical_spo(kg, monkeypatch):
 
 
 def test_hashes_injective_single_scan_matches_union_fallback(kg):
-    """The ids-table single-scan implementation and the per-space union
-    fallback (ids=None) must agree."""
-    from dataclasses import replace
+    """The ids-table single scan and a per-space union of the three join
+    key-spaces (the dictionary's per-role tables) must agree."""
+    from pyspark.sql import functions as F
 
     from hdtspark import encode as enc
 
-    assert kg.dict.ids is not None
-    fast = enc.hashes_injective(kg.dict)
-    slow = enc.hashes_injective(replace(kg.dict, ids=None))
+    d = kg.dict
+    spaces = (d.subj_global.select(F.lit("s").alias("_sp"), "term")
+              .unionAll(d.obj_global.select(F.lit("o").alias("_sp"), "term"))
+              .unionAll(d.predicates.select(F.lit("p").alias("_sp"), "term")))
+    rows = (spaces.groupBy("_sp")
+            .agg(F.countDistinct(F.xxhash64("term")).alias("dh"),
+                 F.count("*").alias("n")).collect())
+    fast = enc.hashes_injective(d)
+    slow = all(r["dh"] == r["n"] for r in rows)
+    assert len(rows) == 3
     assert fast is True and slow is True

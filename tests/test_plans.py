@@ -330,33 +330,45 @@ def test_unbound_closure_runs_one_action_per_step(spark, kg, golden_rows):
     assert steps <= len(actions) <= steps + 3, (actions, steps, len(jobs))
 
 
-def test_query_paths_job_counts(spark, kg):
-    """Spark jobs per query, counted warm, so a change that adds a round
-    trip shows: a bound pattern (one lookup job, then the scan with its
-    dictionary broadcasts), a 2-pattern BGP (one lookup job for all its
-    constants, then the join), and a negated set with a bound endpoint,
-    whose endpoint and excluded predicates resolve in ONE lookup job."""
-    from dataclasses import replace
+def test_query_paths_job_counts(spark, transcripts, golden_oracle, tmp_path):
+    """Spark jobs per query over the golden warehouse (the KG ``cli query``
+    serves: parquet projections, no cached string enumeration), counted
+    warm, so a change that adds a round trip shows: a bound pattern runs
+    one lookup job for its constants, one dictionary broadcast per FREE
+    position (bound positions echo their constants) and the scan, and an
+    absent constant runs only the lookup; a 2-pattern BGP runs one lookup
+    job for all its constants, then the join; a negated set with a bound
+    endpoint resolves its endpoint and excluded predicates in ONE lookup
+    job."""
+    from hdtspark import checkpoint, query, rules, sparql, synth
 
-    from hdtspark import query, rules, sparql, synth
-
-    # the session KG may hold a cached string enumeration, which bound
-    # patterns would filter instead of taking the id route
-    kg = replace(kg, _str_enum=None)
+    kg, _ = checkpoint.materialize_kg(spark, transcripts, str(tmp_path / "wh"))
     cv = synth.conv_id_for(7)
     turn = rules.turn_iri(cv, 0)
+    (_, _, role), = golden_oracle.pattern(turn, rules.P_ROLE, None)
+
+    def pattern(s=None, p=None, o=None):
+        return lambda: query.triples_with_pattern(kg, s, p, o)
+
     cases = {
-        "bound-pattern": (lambda: query.triples_with_pattern(
-            kg, s=turn, p=rules.P_ROLE), 5),
+        "spo": (pattern(turn, rules.P_ROLE, role), 2),
+        "sp?": (pattern(turn, rules.P_ROLE), 3),
+        "s?o": (pattern(turn, None, role), 3),
+        "?po": (pattern(None, rules.P_ROLE, role), 3),
+        "s??": (pattern(turn), 4),
+        "?p?": (pattern(None, rules.P_ROLE), 4),
+        "??o": (pattern(None, None, role), 4),
         "bgp-2": (lambda: sparql.bgp(kg, [
             (rules.conv_iri(cv), rules.P_HASTURN, "?t"),
-            ("?t", rules.P_ROLE, "?r")]), 7),
+            ("?t", rules.P_ROLE, "?r")]), 5),
         "negset-bound": (lambda: sparql.query(
             kg, f"SELECT ?x {{ <{turn}> !<{rules.P_TEXT}> ?x }}"), 3),
+        "absent": (pattern(turn, "http://ex.org/p/absent"), 1),
     }
     got = {}
     for name, (q, _) in cases.items():
-        assert q().collect(), name     # warm the cached projections
+        # a warm-up run, which also checks that only "absent" is empty
+        assert bool(q().collect()) == (name != "absent"), name
         got[name] = len(_job_ids(spark, f"test-jobs-{name}",
                                  lambda: q().collect()))
     assert got == {k: w for k, (_, w) in cases.items()}, got

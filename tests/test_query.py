@@ -107,3 +107,77 @@ def test_triple_ids_with_id_pattern(kg, golden_oracle):
     # 0-sentinel behaves as wildcard, matching the reference
     assert q.triple_ids_with_id_pattern(kg, 0, 0, 0).count() == \
         len(golden_oracle.spo)
+
+
+A, B = "http://ex.org/a", "http://ex.org/b"
+KNOWS, LABEL = "http://ex.org/p/knows", "http://ex.org/p/label"
+BNODE, LANG = "_:b0", '"hallo"@de'
+QUOTED = '"er sagte \\"straße\\" 😀"'
+AWKWARD = [
+    (A, KNOWS, B), (A, KNOWS, BNODE), (BNODE, KNOWS, A), (A, LABEL, LANG),
+    (B, LABEL, QUOTED), (BNODE, LABEL, QUOTED), (KNOWS, LABEL, LANG),
+    (KNOWS, rules.P_TYPE, "http://ex.org/Property"), (B, KNOWS, KNOWS),
+]
+
+
+@pytest.fixture(scope="module")
+def awkward_kg(spark):
+    """A KG holding a language-tagged literal, a literal with an escaped
+    quote and non-ASCII text, a blank node, and a term (``KNOWS``) that is
+    a predicate, a subject and an object."""
+    from hdtspark import pipeline
+
+    kg = pipeline.build_kg_from_triples(
+        spark.createDataFrame(AWKWARD, "s string, p string, o string"),
+        with_adjacency=False)
+    yield kg
+    kg.unpersist()
+
+
+def test_bound_shapes_echo_awkward_constants(awkward_kg):
+    """Every bound shape over every triple's constants returns exactly the
+    plain-Python filter's rows (bound positions are echoed, not
+    translated), and an absent constant returns nothing."""
+    pats = {tuple(v if (mask >> i) & 1 else None for i, v in enumerate(t))
+            for t in AWKWARD for mask in range(1, 8)}
+    pats |= {(A, KNOWS, LANG), (None, LABEL, '"hallo"@en'), ("_:b1", None, None)}
+    for s, p, o in sorted(pats, key=repr):
+        exp = sorted(t for t in AWKWARD
+                     if all(v is None or v == x for v, x in zip((s, p, o), t)))
+        assert _got(awkward_kg, s, p, o) == exp, (s, p, o)
+    # the id route answered every pattern: no string enumeration was built
+    assert awkward_kg._str_enum is None
+
+
+def _union_lookup(d, pairs):
+    """The per-space union lookup (one point filter per space's table)."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame, functions as F
+
+    want: dict[str, set[str]] = {}
+    for sp, term in pairs:
+        want.setdefault(sp, set()).add(term)
+    parts = [d.space(sp)[0].filter(F.col("term").isin(sorted(terms)))
+             .select(F.lit(sp).alias("k"), "term", "id")
+             for sp, terms in want.items()]
+    return {(r["k"], r["term"]): r["id"]
+            for r in reduce(DataFrame.unionAll, parts).collect()}
+
+
+def test_lookup_matches_per_space_union(awkward_kg):
+    """The one-scan ``lookup`` returns the same ids as a union of per-space
+    point filters, for every term in every space, one space at a time and
+    all at once; absent pairs are missing."""
+    d = awkward_kg.dict
+    terms = sorted({x for t in AWKWARD for x in t}) + ["http://ex.org/none"]
+    spaces = ("s", "o", "p", "shared", "node")
+    every = [(sp, t) for sp in spaces for t in terms]
+    want = _union_lookup(d, every)
+    assert d.lookup(every) == want
+    for sp in spaces:
+        one = [(sp, t) for t in terms]
+        assert d.lookup(one) == {k: v for k, v in want.items() if k[0] == sp}
+    assert ("s", LANG) not in want and ("p", KNOWS) in want
+    assert want[("s", KNOWS)] == want[("o", KNOWS)] <= d.n_shared
+    assert d.lookup([]) == {}
