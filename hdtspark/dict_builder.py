@@ -10,8 +10,8 @@ section by global lexicographic (byte) order via ranking.dense_ids_grouped
 Global ID routing (reference src/four_sect_dict.rs:98-150): shared terms
 keep their section id in both the subject and object ID spaces; overflow
 sections add ``n_shared``.  ``FourSectDict`` owns every id space a query
-uses (``space``, ``lookup``), including the global node space path closures
-iterate on.
+uses (``space``, ``lookup``), including the global node space every SPARQL
+relation joins on.
 """
 
 from __future__ import annotations
@@ -86,14 +86,13 @@ class FourSectDict:
         """The sections an id space covers, each with the offset its
         section-local ids take in the space.
 
-        ``s``/``o``: the per-role subject/object spaces (shared ids valid in
-        both); ``p``: predicates; ``shared``: ids <= n_shared; ``node``: the
-        global node space of path closures (see ``node_global_expr``)."""
+        ``s``/``o``: the per-role subject/object spaces of the triples (shared
+        ids valid in both); ``p``: predicates; ``node``: the global node
+        space every SPARQL relation joins on (see ``node_global_expr``)."""
         n = self.n_shared
         return {"s": {"shared": 0, "subjects": n},
                 "o": {"shared": 0, "objects": n},
                 "p": {"predicates": 0},
-                "shared": {"shared": 0},
                 "node": {"shared": 0, "subjects": n,
                          "objects": n + self.n_subjects}}[name]
 
@@ -107,18 +106,24 @@ class FourSectDict:
         """(term, id) over the full object ID space 1..n_shared+n_obj."""
         return self.space("o")[0]
 
-    def node_global_expr(self, col: str, space: str) -> Column:
-        """Map an s-/o-/shared-space id column to the global node-ID space.
+    def node_global_expr(self, col: str) -> Column:
+        """Map an object-space id column to the global node-id space.
 
-        Shared terms keep 1..n_shared, subject-only terms keep
-        n_shared+1..n_shared+n_subj and object-only ids shift up by n_subj —
-        an arithmetic bijection to term identity, so global-id equality is
-        term equality with no dictionary join and no shared-section guard."""
-        if space in ("s", "shared"):
-            return F.col(col)
-        assert space == "o", space
+        A subject id already is a node id (shared terms keep 1..n_shared,
+        subject-only terms n_shared+1..n_shared+n_subj); object-only ids
+        shift up by n_subj.  An arithmetic bijection to term identity, so
+        node-id equality is term equality with no dictionary join and no
+        shared-section guard."""
         return (F.when(F.col(col) <= self.n_shared, F.col(col))
                 .otherwise(F.col(col) + self.n_subjects))
+
+    def predicate_nodes(self) -> DataFrame:
+        """(p, node): the node id of every predicate term that is also a
+        subject or object, at most ``n_predicates`` rows — the one join a
+        variable at both a predicate and a subject/object position needs."""
+        preds = self.predicates.select("term", F.col("id").alias("p"))
+        return (self.space("node")[0].join(F.broadcast(preds), "term")
+                .select("p", F.col("id").alias("node")))
 
     def space(self, name: str) -> tuple[DataFrame, int]:
         """The (term, id) table of an id space (``offsets``) and its exact

@@ -4,15 +4,17 @@ experimental SPARQL feature, src/sparql.rs:45-83).
 The reference plugs its quad-pattern lookup into an external SPARQL
 evaluator; everything relational (BGP joins, projection, expressions,
 ORDER BY / LIMIT / UNION) is delegated.  Here the delegation target is
-Catalyst: ``register_views`` exposes the KG as SQL views and
-``bgp`` compiles a basic graph pattern (list of triple patterns with
-shared variables) into self-joins of the triples view — nothing custom.
+Catalyst: ``register_views`` exposes the KG as SQL views, and ``bgp``
+answers a basic graph pattern (list of triple patterns with shared
+variables) as id-level pattern lookups joined on 8-byte global node ids
+(``bgp_ids``), translated to strings once at the end.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from .encode import dict_side
 from .query import KG, ids_to_strings, triple_ids_with_id_pattern
 
 
@@ -44,181 +46,92 @@ def _is_var(t: str) -> bool:
     return t.startswith("?")
 
 
+def empty_ids(kg: KG, cols: list[str]) -> DataFrame:
+    """A provably empty id relation over ``cols``: Spark plans a zero-row
+    limit as an empty local relation, so neither it nor the joins and
+    translations above it run a job."""
+    return kg.spo.select(*[F.col("s").alias(c) for c in cols]).limit(0)
+
+
+def join_solutions(df: DataFrame | None, rel: DataFrame) -> DataFrame:
+    """Join a solution relation into the accumulated solutions on their
+    shared variable columns (a cross product when they share none); None
+    is the empty group, whose join with ``rel`` is ``rel``."""
+    if df is None:
+        return rel
+    common = [c for c in df.columns if c in rel.columns]
+    return df.join(rel, on=common) if common else df.crossJoin(rel)
+
+
+def pattern_vars(kg: KG, scan: DataFrame, pattern: tuple[str, str, str],
+                 space: dict[str, str]) -> DataFrame:
+    """One pattern's id-level scan (s, p, o) as one column per variable, in
+    that variable's id space: a subject id already is a global node id, an
+    object id maps through ``FourSectDict.node_global_expr``, and a
+    predicate variable in the ``node`` space maps through the broadcast
+    ``(p, node)`` table (dropping predicates that are not nodes).  A
+    variable repeated in the pattern becomes an equality filter."""
+    ids: dict[str, Column] = {"s": F.col("s"),
+                              "o": kg.dict.node_global_expr("o"),
+                              "p": F.col("p")}
+    p = pattern[1]
+    if _is_var(p) and space[p[1:]] == "node":
+        scan = scan.join(dict_side(kg.dict.predicate_nodes(),
+                                   kg.dict.n_predicates), "p")
+        ids["p"] = F.col("node")
+    cols: dict[str, Column] = {}
+    for pos, t in zip("spo", pattern):
+        if not _is_var(t):
+            continue
+        if t[1:] in cols:
+            scan = scan.filter(cols[t[1:]] == ids[pos])
+        else:
+            cols[t[1:]] = ids[pos]
+    return scan.select(*[c.alias(v) for v, c in cols.items()])
+
+
 def bgp_ids(kg: KG, patterns: list[tuple[str, str, str]]
-            ) -> tuple[DataFrame, dict[str, str]] | None:
+            ) -> tuple[DataFrame, dict[str, str]]:
     """ID-level BGP join: each pattern is an id-level pattern query
     (``query.triple_ids_with_id_pattern``, a pruned projection scan), the
-    patterns join on 8-byte IDs, and ALL string translation is deferred to
+    patterns join on 8-byte ids, and ALL string translation is deferred to
     the caller (the reference evaluates BGPs as repeated ID-level
-    quad-pattern lookups, src/sparql.rs:45-68 — round 2's string-level join
-    instantiated the full spo⋈3-dict enumeration per pattern, k full scans
-    with wide string shuffle keys for a k-pattern BGP).
+    quad-pattern lookups, src/sparql.rs:45-68).
 
-    Returns (ids_df, var -> id-space) where space is 's' (subject ids),
-    'o' (object ids), 'p' (predicate ids), or 'shared' (ids <= n_shared,
-    valid in both the subject and object spaces).  Returns None when a
-    constant is unknown (empty result).  Raises ValueError when a variable
-    spans the predicate space and the s/o space (disjoint ID spaces — the
-    caller falls back to string-level joins).
-
-    The s/o space subtlety: subject ids and object ids share 1..n_shared
-    (the shared section) but collide numerically above it, so a variable
-    bound at an s-position in one pattern and an o-position in another may
-    only match shared terms — both sides are guarded ``id <= n_shared``
-    before the equi-join (a term occurring as both subject and object is by
-    construction in the shared section with ONE id).
+    Every variable has one id space, picked from the patterns before any
+    join: ``node`` (global node ids, where id equality is term equality)
+    for a variable at any subject or object position, ``p`` for a
+    predicate-only variable (``pattern_vars``).  The patterns then join on
+    plain variable-name columns.  Returns (ids_df with one column per
+    variable, sorted by name; var -> space).  An unknown constant makes the
+    relation provably empty (``empty_ids``).
     """
+    space: dict[str, str] = {}
+    for pat in patterns:
+        for pos, t in zip("spo", pat):
+            if _is_var(t) and space.get(t[1:]) != "node":
+                space[t[1:]] = "p" if pos == "p" else "node"
     want = {(pos, t) for pat in patterns
             for pos, t in zip("spo", pat) if not _is_var(t)}
     ids = kg.dict.lookup(want)
-    if len(ids) < len(want):    # an unknown constant: provably empty
-        return None
-    n_shared = kg.dict.n_shared
-
-    result: DataFrame | None = None
-    space: dict[str, str] = {}     # var -> 's' | 'o' | 'p' | 'shared'
-    col_of: dict[str, str] = {}    # var -> column name in result
-
-    for i, (s, p, o) in enumerate(patterns):
-        df = triple_ids_with_id_pattern(
+    if len(ids) < len(want):
+        return empty_ids(kg, sorted(space)), space
+    result = None
+    for pat in patterns:
+        scan = triple_ids_with_id_pattern(
             kg, *(None if _is_var(t) else ids[(pos, t)]
-                  for pos, t in zip("spo", (s, p, o))))
-        # variable columns of this pattern, renamed to per-pattern names
-        local: dict[str, tuple[str, str]] = {}  # var -> (colname, space)
-        for pos, term in (("s", s), ("p", p), ("o", o)):
-            if not _is_var(term):
-                continue
-            v = term[1:]
-            if v in local:
-                # same var twice within one pattern: ID equality, and for
-                # s/o pairs only shared ids denote the same term
-                prev_pos = local[v][1]
-                if "p" in (prev_pos, pos):
-                    raise ValueError(
-                        f"variable ?{v} spans predicate and s/o ID spaces")
-                df = df.filter((F.col(local[v][1]) == F.col(pos))
-                               & (F.col(pos) <= n_shared))
-                local[v] = (local[v][0], "shared")
-            else:
-                local[v] = (f"_{i}_{v}", pos)
-        sel = [F.col(sp).alias(cn) for v, (cn, sp) in local.items()
-               if sp in ("s", "p", "o")]
-        # vars collapsed to 'shared' keep their first position's column
-        for v, (cn, sp) in local.items():
-            if sp == "shared":
-                pos0 = "s" if "?" + v == s else ("p" if "?" + v == p else "o")
-                sel.append(F.col(pos0).alias(cn))
-        step = df.select(*sel)
-
-        if result is None:
-            result = step
-        else:
-            conds, guards = [], []
-            for v, (cn, sp) in local.items():
-                if v not in space:
-                    continue
-                acc_sp = space[v]
-                pair = {acc_sp, sp}
-                if "p" in pair and pair != {"p"}:
-                    raise ValueError(
-                        f"variable ?{v} spans predicate and s/o ID spaces")
-                if pair in ({"s", "o"}, {"shared", "s"}, {"shared", "o"}):
-                    # cross-space: only shared ids can match
-                    guards.append((col_of[v], cn))
-                    space[v] = "shared"
-                conds.append((col_of[v], cn))
-            if conds:
-                left = result
-                right = step
-                for lcol, rcol in guards:
-                    left = left.filter(F.col(lcol) <= n_shared)
-                    right = right.filter(F.col(rcol) <= n_shared)
-                cond = None
-                for lcol, rcol in conds:
-                    e = left[lcol] == right[rcol]
-                    cond = e if cond is None else (cond & e)
-                result = left.join(right, cond, "inner").drop(
-                    *[rcol for _, rcol in conds])
-            else:
-                result = result.crossJoin(step)
-        for v, (cn, sp) in local.items():
-            if v not in space:
-                space[v] = sp
-                col_of[v] = cn
+                  for pos, t in zip("spo", pat)))
+        result = join_solutions(result, pattern_vars(kg, scan, pat, space))
     assert result is not None, "empty BGP"
-    return result.select(*[F.col(col_of[v]).alias(v) for v in sorted(space)]), space
+    return result.select(*sorted(space)), space
 
 
 def bgp(kg: KG, patterns: list[tuple[str, str, str]]) -> DataFrame:
     """Evaluate a basic graph pattern: each element is (s, p, o) where a
     leading '?' marks a variable; constants are canonical term strings.
 
-    Compiles ID-level (``bgp_ids``): per-pattern pruned projection scans
-    joined on integer IDs, strings materialized once at the end.  Falls
-    back to string-level joins only for the degenerate case of a variable
-    spanning the predicate and subject/object ID spaces (disjoint spaces).
-    Returns one column per distinct variable, named without the '?'.
+    One dictionary lookup for the constants, the id-level join
+    (``bgp_ids``), then one translation of the result rows.  Returns one
+    column per distinct variable, named without the '?'.
     """
-    try:
-        compiled = bgp_ids(kg, patterns)
-    except ValueError:
-        return bgp_strings(kg, patterns)
-    if compiled is None:
-        all_vars = sorted({t[1:] for pat in patterns for t in pat
-                           if _is_var(t)})
-        schema = ", ".join(f"`{v}` string" for v in all_vars)
-        return kg.spo.sparkSession.createDataFrame([], schema)
-    ids_df, space = compiled
-    return ids_to_strings(kg, ids_df, space)
-
-
-def bgp_strings(kg: KG, patterns: list[tuple[str, str, str]]) -> DataFrame:
-    """String-level BGP join over the persisted enumeration — the fallback
-    for variables that span disjoint ID spaces (predicate vs subject/object).
-    """
-    enum = kg.str_enum()
-
-    def is_var(t: str) -> bool:
-        return t.startswith("?")
-
-    result: DataFrame | None = None
-    bound_vars: dict[str, str] = {}  # var -> column name in result
-
-    for i, (s, p, o) in enumerate(patterns):
-        t = enum.alias(f"t{i}")
-        cols, filters, joins = {}, [], []
-        for pos, term in (("s", s), ("p", p), ("o", o)):
-            col = F.col(f"t{i}.{pos}")
-            if is_var(term):
-                v = term[1:]
-                if v in cols:           # same variable twice in one pattern
-                    filters.append(col == cols[v])
-                elif v in bound_vars:
-                    joins.append((bound_vars[v], col))
-                else:
-                    cols[v] = col
-            else:
-                filters.append(col == term)
-        step = t
-        for f in filters:
-            step = step.filter(f)
-        proj = step.select(
-            *[c.alias(v) for v, c in cols.items()],
-            *[c.alias(f"_join_{j}") for j, (_, c) in enumerate(joins)],
-        )
-        if result is None:
-            result = proj
-            bound_vars.update({v: v for v in cols})
-        else:
-            if joins:
-                cond = None
-                for j, (existing, _) in enumerate(joins):
-                    e = F.col(f"_l.{existing}") == F.col(f"_r._join_{j}")
-                    cond = e if cond is None else (cond & e)
-                result = result.alias("_l").join(proj.alias("_r"), cond, "inner")
-                result = result.drop(*[f"_join_{j}" for j in range(len(joins))])
-            else:
-                result = result.crossJoin(proj)
-            bound_vars.update({v: v for v in cols})
-    assert result is not None, "empty BGP"
-    return result.select(*sorted(bound_vars))
+    return ids_to_strings(kg, *bgp_ids(kg, patterns))

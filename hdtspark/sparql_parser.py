@@ -49,6 +49,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from .query import KG, ids_to_strings, triple_ids_with_id_pattern
+from .sparql import bgp, bgp_ids, empty_ids, join_solutions, pattern_vars
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -103,9 +104,9 @@ class PlusPath:
 @dataclass(frozen=True)
 class StarPath:
     """Zero-or-more (``p*``) — evaluated as the duplicate-free union of the
-    zero-length arm (reflexive pairs over the graph's NODE set, which is
-    exactly the dictionary's shared+subjects+objects sections — no triple
-    scan) and the ``p+`` closure.  Kept symbolic, not desugared into UNION
+    zero-length arm (reflexive pairs over the graph's node ids, dense over
+    the dictionary's shared+subjects+objects sections — no scan) and the
+    ``p+`` closure.  Kept symbolic, not desugared into UNION
     arms: SPARQL path semantics are SET-based (W3C ALP), so a cyclic graph
     must not yield duplicate (x, x) rows from both arms."""
 
@@ -1017,7 +1018,7 @@ def _closure_base_ids(kg: KG, pid: int) -> DataFrame:
     through ``FourSectDict.node_global_expr``.  The pruned p-filter scan is
     the same route as Q6 (?P?); no strings anywhere."""
     return kg.pso.filter(F.col("p") == pid).select(
-        F.col("s").alias("a"), kg.dict.node_global_expr("o", "o").alias("b"))
+        F.col("s").alias("a"), kg.dict.node_global_expr("o").alias("b"))
 
 
 def closure_step(frontier: DataFrame, base: DataFrame, acc: DataFrame,
@@ -1110,13 +1111,9 @@ def _composite_pairs_ids(kg: KG, node) -> DataFrame:
     (a, b): 8-byte rows for the closure iteration and the single-step arms.
 
     Each desugared alternative compiles through the ID-level BGP joiner
-    (``bgp_ids`` — pruned projection scans, NO translation); its two
-    endpoint columns are then mapped into the global node-ID space, which
-    makes ids comparable across alternatives that bound the endpoints in
-    different ID spaces (e.g. a forward arm ending o-space unioned with an
-    inverse arm ending s-space)."""
-    from . import sparql as bgp_mod
-
+    (``bgp_ids`` — pruned projection scans, NO translation), whose endpoint
+    columns already are node ids, so alternatives that bind the endpoints
+    at different positions union directly."""
     n = [0]
 
     def fresh() -> str:
@@ -1129,55 +1126,31 @@ def _composite_pairs_ids(kg: KG, node) -> DataFrame:
             raise ValueError(
                 "nested closure/negated set inside a closed path is not "
                 "supported")
-        compiled = bgp_mod.bgp_ids(kg, patterns)
-        if compiled is None:      # unknown constant: provably empty arm
-            continue
-        ids_df, space = compiled
-        parts.append(ids_df.select(
-            kg.dict.node_global_expr("__ca", space["__ca"]).alias("a"),
-            kg.dict.node_global_expr("__cb", space["__cb"]).alias("b")))
-    if not parts:
-        return kg.spo.sparkSession.createDataFrame([], "a long, b long")
+        ids_df, _ = bgp_ids(kg, patterns)
+        parts.append(ids_df.select(F.col("__ca").alias("a"),
+                                   F.col("__cb").alias("b")))
     return _union(parts).distinct()
 
 
-def _nodes_df(kg: KG) -> DataFrame:
-    """The graph's node set (terms in subject or object position) as a
-    one-column ``term`` DataFrame — exactly the dictionary's shared +
-    subjects + objects sections (disjoint by construction, so no distinct),
-    never a triple scan.  This is the domain of zero-length path arms."""
-    d = kg.dict
-    return (d.shared.select("term")
-            .unionAll(d.subjects.select("term"))
-            .unionAll(d.objects.select("term")))
+def _end_vars(s: str, o: str) -> list[str]:
+    """A pattern's endpoint variable names, in (s, o) order, once each."""
+    return list(dict.fromkeys(t[1:] for t in (s, o) if t.startswith("?")))
 
 
-def _zero_rel(kg: KG, s: str, o: str) -> DataFrame:
-    """Zero-length path arm: reflexive pairs over the node set (W3C
-    ZeroLengthPath — variables range over the graph's nodes; a bound
-    endpoint must be a node)."""
-    from pyspark.sql import functions as F
-
-    nodes = _nodes_df(kg)
-    s_var, o_var = s.startswith("?"), o.startswith("?")
-    if s_var and o_var:
-        if s == o:
-            return nodes.select(F.col("term").alias(s[1:]))
-        return nodes.select(F.col("term").alias(s[1:]),
-                            F.col("term").alias(o[1:]))
-    if o_var:
-        return nodes.filter(F.col("term") == s).select(
-            F.col("term").alias(o[1:]))
-    return nodes.filter(F.col("term") == o).select(
-        F.col("term").alias(s[1:]))
-
-
-def _empty_rel(kg: KG, s: str, o: str) -> DataFrame:
-    """An empty relation over the pattern's var columns (string terms), in
-    the (s, o) order a non-empty one has."""
-    cols = list(dict.fromkeys(t[1:] for t in (s, o) if t.startswith("?")))
-    return kg.spo.sparkSession.createDataFrame(
-        [], ", ".join(f"`{v}` string" for v in cols))
+def _zero_ids(kg: KG, nodes: dict[str, int], s: str, o: str) -> DataFrame:
+    """Zero-length path arm on node ids (W3C ZeroLengthPath — variables
+    range over the graph's nodes; a bound endpoint must be a node).  Node
+    ids are dense, 1..n_shared+n_subjects+n_objects, so both ends free is
+    a range; one end bound is that endpoint's id from ``nodes``."""
+    spark = kg.spo.sparkSession
+    if s.startswith("?") and o.startswith("?"):
+        d = kg.dict
+        ids = spark.range(1, d.n_shared + d.n_subjects + d.n_objects + 1)
+    else:
+        end = o if s.startswith("?") else s
+        ids = (spark.range(nodes[end], nodes[end] + 1) if end in nodes
+               else spark.range(0))
+    return ids.select(*[F.col("id").alias(v) for v in _end_vars(s, o)])
 
 
 def _path_edges(kg: KG, s: str, marker, o: str
@@ -1199,44 +1172,43 @@ def _path_edges(kg: KG, s: str, marker, o: str
     return _composite_pairs_ids(kg, marker.node), nodes
 
 
-def _one_arm_rel(kg: KG, s: str, marker, o: str) -> DataFrame:
-    """The non-zero arm of a path marker with >=1 free endpoint: the inner
-    edge relation (``p?``) or its ``closure`` (``p+``/``p*``), on global
-    node ids, translated to term strings ONCE, result-sized, through the
-    node table."""
-    base, nodes = _path_edges(kg, s, marker, o)
+def _one_arm_ids(kg: KG, base: DataFrame | None, nodes: dict[str, int],
+                 s: str, marker, o: str) -> DataFrame:
+    """The non-zero arm of a path marker with >=1 free endpoint, on global
+    node ids: the inner edge relation ``base`` (``p?``) or its ``closure``
+    (``p+``/``p*``)."""
     if base is None:
-        return _empty_rel(kg, s, o)
+        return empty_ids(kg, _end_vars(s, o))
     step = isinstance(marker, OptPath)
     s_var, o_var = s.startswith("?"), o.startswith("?")
     if s_var and o_var:
         pairs = base if step else closure(base)
         if s == o:
-            ids = (pairs.filter(F.col("a") == F.col("b"))
-                   .select(F.col("a").alias(s[1:])))
-        else:
-            ids = pairs.select(F.col("a").alias(s[1:]),
-                               F.col("b").alias(o[1:]))
+            return (pairs.filter(F.col("a") == F.col("b"))
+                    .select(F.col("a").alias(s[1:])))
+        return pairs.select(F.col("a").alias(s[1:]), F.col("b").alias(o[1:]))
+    # one end bound: walk forward from the subject (reaching objects)
+    # or backward from the object
+    seed, out = (nodes[s], o) if o_var else (nodes[o], s)
+    if step:
+        at, to = ("a", "b") if o_var else ("b", "a")
+        reach = base.filter(F.col(at) == seed).select(F.col(to).alias("b"))
     else:
-        # one end bound: walk forward from the subject (reaching objects)
-        # or backward from the object
-        seed, out = (nodes[s], o) if o_var else (nodes[o], s)
-        if step:
-            at, to = ("a", "b") if o_var else ("b", "a")
-            reach = base.filter(F.col(at) == seed).select(F.col(to).alias("b"))
-        else:
-            reach = closure(base, seed=seed, backward=not o_var)
-        ids = reach.select(F.col("b").alias(out[1:]))
-    return ids_to_strings(kg, ids, "node")
+        reach = closure(base, seed=seed, backward=not o_var)
+    return reach.select(F.col("b").alias(out[1:]))
 
 
 def _path_rel(kg: KG, s: str, marker, o: str) -> DataFrame:
-    rel = _one_arm_rel(kg, s, marker, o)
-    if isinstance(marker, PlusPath):
-        return rel
-    # star/opt: set semantics (W3C ALP) — dedup across the two arms; a node
-    # on a cycle is a reflexive pair in BOTH arms and must appear once
-    return rel.unionByName(_zero_rel(kg, s, o)).distinct()
+    """A path pattern with >=1 free endpoint: its arms on node ids, term
+    strings translated ONCE, result-sized, through the node table."""
+    base, nodes = _path_edges(kg, s, marker, o)
+    ids = _one_arm_ids(kg, base, nodes, s, marker, o)
+    if not isinstance(marker, PlusPath):
+        # star/opt: set semantics (W3C ALP) — dedup across the two arms; a
+        # node on a cycle is a reflexive pair in BOTH arms and must appear
+        # once
+        ids = ids.unionByName(_zero_ids(kg, nodes, s, o)).distinct()
+    return ids_to_strings(kg, ids, "node")
 
 
 def _path_hit(kg: KG, s: str, marker, o: str) -> bool:
@@ -1260,60 +1232,52 @@ def _negset_arm(kg: KG, s: str, excl: tuple, o: str) -> DataFrame | bool:
     """One arm of a negated property set: edges matching the (s, o)
     endpoint bindings whose predicate is NOT in ``excl``.  ID route — bound
     endpoints and the excluded predicates resolve in one lookup job, the
-    scan keeps its pruned projection routing, the exclusion is a residual
-    ``p NOT IN`` filter over the (few) excluded predicate ids, and only
-    result rows are translated.  Returns a bool for the both-bound
-    existence case."""
-    s_var, o_var = s.startswith("?"), o.startswith("?")
+    scan keeps its pruned projection routing and the exclusion is a
+    residual ``p NOT IN`` filter over the (few) excluded predicate ids.
+    Returns the endpoint variables as node ids, or a bool for the
+    both-bound existence case."""
     ends = [(k, t) for k, t in (("s", s), ("o", o)) if not t.startswith("?")]
     found = kg.dict.lookup(ends + [("p", t) for t in excl])
+    free = _end_vars(s, o)
     if any(e not in found for e in ends):
         # bound endpoint not in the graph
-        return _empty_rel(kg, s, o) if s_var or o_var else False
+        return empty_ids(kg, free) if free else False
     pids = [i for (k, _), i in found.items() if k == "p"]
     ids = triple_ids_with_id_pattern(kg, found.get(("s", s)), None,
                                      found.get(("o", o)))
     if pids:
         ids = ids.filter(~F.col("p").isin(pids))
-    if not s_var and not o_var:
+    if not free:
         return ids.limit(1).count() > 0
-    if s_var and o_var and s == o:
-        # one var at both ends: only shared ids denote one term in both
-        ids = ids.filter((F.col("s") == F.col("o"))
-                         & (F.col("s") <= kg.dict.n_shared))
-        return ids_to_strings(kg, ids.select(F.col("s").alias(s[1:])),
-                              "shared")
-    cols = {t[1:]: k for k, t in (("s", s), ("o", o)) if t.startswith("?")}
-    return ids_to_strings(
-        kg, ids.select(*[F.col(k).alias(v) for v, k in cols.items()]), cols)
+    return pattern_vars(kg, ids, (s, "", o), {})
+
+
+def _join_exists(kg: KG, df: DataFrame | None, hit: bool) -> DataFrame:
+    """Join a both-endpoints-bound pattern's existence result into the
+    solutions: all of them on a hit, none otherwise (with no solutions yet,
+    the single empty solution or nothing)."""
+    if df is None:
+        df = kg.spo.sparkSession.range(1).drop("id")
+    return df if hit else df.limit(0)
 
 
 def _join_negset(kg: KG, df: DataFrame | None, s: str, ns: NegSet,
                  o: str) -> DataFrame:
     """Join one negated-property-set pattern into the solutions.  Forward
     IRIs exclude predicates of forward edges; inverted IRIs exclude
-    predicates of REVERSED edges; a mixed set is the union of both arms
-    (W3C NegatedPropertySet)."""
+    predicates of REVERSED edges; a mixed set is the duplicate-free union
+    of both arms on node ids (W3C NegatedPropertySet), translated once."""
     arms = []
     if ns.fwd or not ns.inv:
         arms.append(_negset_arm(kg, s, ns.fwd, o))
     if ns.inv:
         arms.append(_negset_arm(kg, o, ns.inv, s))
     if isinstance(arms[0], bool):      # both endpoints bound: existence
-        hit = any(arms)
-        if df is None:
-            one = kg.spo.sparkSession.range(1).drop("id")
-            return one if hit else one.limit(0)
-        return df if hit else df.limit(0)
-    rel = arms[0]
-    for other in arms[1:]:
-        rel = rel.unionByName(other)
+        return _join_exists(kg, df, any(arms))
+    ids = arms[0]
     if len(arms) > 1:
-        rel = rel.distinct()
-    if df is None:
-        return rel
-    common = [c for c in df.columns if c in rel.columns]
-    return df.join(rel, on=common, how="inner") if common else df.crossJoin(rel)
+        ids = ids.unionByName(arms[1]).distinct()
+    return join_solutions(df, ids_to_strings(kg, ids, "node"))
 
 
 def _join_path(kg: KG, df: DataFrame | None, s: str, marker,
@@ -1321,16 +1285,8 @@ def _join_path(kg: KG, df: DataFrame | None, s: str, marker,
     """Join one symbolic path pattern (``p+``/``p*``/``p?``) into the
     accumulated solutions."""
     if not s.startswith("?") and not o.startswith("?"):
-        hit = _path_hit(kg, s, marker, o)
-        if df is None:
-            one = kg.spo.sparkSession.range(1).drop("id")
-            return one if hit else one.limit(0)
-        return df if hit else df.limit(0)
-    rel = _path_rel(kg, s, marker, o)
-    if df is None:
-        return rel
-    common = [c for c in df.columns if c in rel.columns]
-    return df.join(rel, on=common, how="inner") if common else df.crossJoin(rel)
+        return _join_exists(kg, df, _path_hit(kg, s, marker, o))
+    return join_solutions(df, _path_rel(kg, s, marker, o))
 
 
 def _solutions_df(kg: KG, ast: "Query") -> DataFrame:
@@ -1347,16 +1303,12 @@ def _eval_group(kg: KG, g: Group, hidden: frozenset = frozenset()) -> DataFrame:
     Catalyst expression projection; OPTIONAL -> left outer join; MINUS ->
     left-anti join on the shared variables (no shared variables removes
     nothing, per SPARQL set-compatibility); FILTER last (group scope)."""
-    from . import sparql as bgp_mod
-
-    from pyspark.sql import functions as F
-
     spark = kg.spo.sparkSession
     _sym = (PlusPath, StarPath, OptPath)
     plain = [t for t in g.patterns if isinstance(t[1], str)]
     closures = [t for t in g.patterns if isinstance(t[1], _sym)]
     negsets = [t for t in g.patterns if isinstance(t[1], NegSet)]
-    df = bgp_mod.bgp(kg, plain) if plain else None
+    df = bgp(kg, plain) if plain else None
     for s, pp, o in closures:
         df = _join_path(kg, df, s, pp, o)
     for s, ns, o in negsets:
@@ -1365,13 +1317,7 @@ def _eval_group(kg: KG, g: Group, hidden: frozenset = frozenset()) -> DataFrame:
         # a subquery is just another solution relation: evaluate it
         # bottom-up (its own projection/aggregation/modifiers) and join on
         # the shared variables
-        sdf = _solutions_df(kg, subq)
-        if df is None:
-            df = sdf
-        else:
-            common = [c for c in df.columns if c in sdf.columns]
-            df = (df.join(sdf, on=common, how="inner") if common
-                  else df.crossJoin(sdf))
+        df = join_solutions(df, _solutions_df(kg, subq))
     for vars_, rows in g.values:
         schema = ", ".join(f"`{v}` string" for v in vars_)
         vdf = spark.createDataFrame(rows, schema)

@@ -337,9 +337,11 @@ def test_query_paths_job_counts(spark, transcripts, golden_oracle, tmp_path):
     one lookup job for its constants, one dictionary broadcast per FREE
     position (bound positions echo their constants) and the scan, and an
     absent constant runs only the lookup; a 2-pattern BGP runs one lookup
-    job for all its constants, then the join; a negated set with a bound
-    endpoint resolves its endpoint and excluded predicates in ONE lookup
-    job."""
+    job for all its constants, then the join, whose two free variables
+    share one broadcast node table; a negated set with a bound endpoint
+    resolves its endpoint and excluded predicates in ONE lookup job; a BGP
+    or a path with an absent constant is a zero-row relation and runs only
+    its lookup."""
     from hdtspark import checkpoint, query, rules, sparql, synth
 
     kg, _ = checkpoint.materialize_kg(spark, transcripts, str(tmp_path / "wh"))
@@ -360,15 +362,21 @@ def test_query_paths_job_counts(spark, transcripts, golden_oracle, tmp_path):
         "??o": (pattern(None, None, role), 4),
         "bgp-2": (lambda: sparql.bgp(kg, [
             (rules.conv_iri(cv), rules.P_HASTURN, "?t"),
-            ("?t", rules.P_ROLE, "?r")]), 5),
+            ("?t", rules.P_ROLE, "?r")]), 4),
         "negset-bound": (lambda: sparql.query(
             kg, f"SELECT ?x {{ <{turn}> !<{rules.P_TEXT}> ?x }}"), 3),
         "absent": (pattern(turn, "http://ex.org/p/absent"), 1),
+        "bgp-absent": (lambda: sparql.bgp(kg, [
+            ("?t", rules.P_ROLE, "?r"),
+            ("?t", "http://ex.org/p/absent", "?x")]), 1),
+        "path-absent": (lambda: sparql.query(
+            kg, "SELECT ?a ?b { ?a <http://ex.org/p/absent>+ ?b }"), 1),
     }
     got = {}
     for name, (q, _) in cases.items():
-        # a warm-up run, which also checks that only "absent" is empty
-        assert bool(q().collect()) == (name != "absent"), name
+        # a warm-up run, which also checks that only the absent cases are
+        # empty
+        assert bool(q().collect()) == ("absent" not in name), name
         got[name] = len(_job_ids(spark, f"test-jobs-{name}",
                                  lambda: q().collect()))
     assert got == {k: w for k, (_, w) in cases.items()}, got

@@ -171,7 +171,7 @@ def test_lookup_matches_per_space_union(awkward_kg):
     all at once; absent pairs are missing."""
     d = awkward_kg.dict
     terms = sorted({x for t in AWKWARD for x in t}) + ["http://ex.org/none"]
-    spaces = ("s", "o", "p", "shared", "node")
+    spaces = ("s", "o", "p", "node")
     every = [(sp, t) for sp in spaces for t in terms]
     want = _union_lookup(d, every)
     assert d.lookup(every) == want
