@@ -1000,10 +1000,13 @@ def parse(q: str) -> Query:
     return _Parser(q).parse()
 
 
-# Step cap for `p+`/`p*` closures: a cycle-safe upper bound on the graph's
-# diameter (a chain of exactly CLOSURE_MAX_ITERS edges closes, one more edge
-# raises).  Read at CALL time, not bound as a default, so a caller facing a
-# deeper graph can raise it per query:
+# Step cap of the Spark closure loop (``_closure_steps``), the regime of
+# edge relations above the broadcast threshold: a cycle-safe upper bound on
+# the graph's diameter (a chain of exactly CLOSURE_MAX_ITERS edges closes,
+# one more edge raises).  A closure whose edges fit the threshold walks them
+# on the driver, which ends on any finite edge set, so the cap does not
+# bound it.  Read at CALL time, not bound as a default, so a caller facing
+# a deeper graph above the threshold can raise it per query:
 #     sparql_parser.CLOSURE_MAX_ITERS = 256
 CLOSURE_MAX_ITERS = 64
 
@@ -1019,6 +1022,13 @@ def _closure_base_ids(kg: KG, pid: int) -> DataFrame:
     the same route as Q6 (?P?); no strings anywhere."""
     return kg.pso.filter(F.col("p") == pid).select(
         F.col("s").alias("a"), kg.dict.node_global_expr("o").alias("b"))
+
+
+def _broadcast_threshold(df: DataFrame) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes (-1:
+    never broadcast)."""
+    return (df.sparkSession._jsparkSession.sessionState().conf()
+            .autoBroadcastJoinThreshold())
 
 
 def closure_step(frontier: DataFrame, base: DataFrame, acc: DataFrame,
@@ -1041,23 +1051,91 @@ def closure_step(frontier: DataFrame, base: DataFrame, acc: DataFrame,
                            F.col("b").alias("_n"))
            .join(base, F.col("_n") == F.col("a"))
            .select(*[F.col("_fa").alias(c) for c in carry], "b").distinct())
-    threshold = (acc.sparkSession._jsparkSession.sessionState().conf()
-                 .autoBroadcastJoinThreshold())
+    threshold = _broadcast_threshold(acc)
     if 0 <= acc_rows * _ID_BYTES * len(frontier.columns) <= threshold:
         acc = F.broadcast(acc)
     return new.join(acc, frontier.columns, "left_anti")
 
 
+def _driver_edges(base: DataFrame, backward: bool = False
+                  ) -> tuple[dict[int, list[int]], int] | None:
+    """``base``'s edges as adjacency lists on the driver, and ``cap``, the
+    (a, b) rows that fit ``spark.sql.autoBroadcastJoinThreshold`` (the rule
+    ``closure_step`` broadcasts by).  ONE job collects at most ``cap + 1``
+    rows: a limit over several partitions would scan them in a growing
+    series of jobs, so one task reads them all and stops at the limit.
+    None when the edges do not fit (or the threshold is -1).  Below the
+    threshold each Spark step would ship these edges through the driver
+    anyway.  ``backward`` reverses every edge."""
+    cap = max(_broadcast_threshold(base), 0) // (2 * _ID_BYTES)
+    if cap == 0:
+        return None
+    rows = base.coalesce(1).limit(cap + 1).collect()
+    if len(rows) > cap:
+        return None
+    adj: dict[int, list[int]] = {}
+    for a, b in rows:
+        if backward:
+            a, b = b, a
+        adj.setdefault(a, []).append(b)
+    return adj, cap
+
+
+def _reach(adj: dict[int, list[int]], seed: int,
+           stop: int | None = None) -> set[int]:
+    """The nodes reachable from ``seed`` over one or more ``adj`` edges
+    (``seed`` itself only through a cycle); the walk ends as soon as it
+    reaches ``stop``."""
+    seen: set[int] = set()
+    todo = [seed]
+    while todo:
+        for m in adj.get(todo.pop(), ()):
+            if m not in seen:
+                seen.add(m)
+                if m == stop:
+                    return seen
+                todo.append(m)
+    return seen
+
+
 def closure(base: DataFrame, seed: int | None = None,
             backward: bool = False) -> DataFrame:
     """The one-or-more transitive closure of the global node-id edge
-    relation ``base`` (a, b) — the single semi-naive loop behind every
+    relation ``base`` (a, b) — the one entry behind every
     ``p+``/``p*``/``(path)+`` evaluation.
 
     Unseeded -> all (a, b) pairs.  Seeded -> the set of nodes reachable from
-    ``seed`` as one column ``b`` (a BFS whose frontier stays result-sized);
-    ``backward`` walks the edges in reverse, so ``b`` then holds the nodes
-    that reach ``seed``.
+    ``seed`` as one column ``b``; ``backward`` walks the edges in reverse,
+    so ``b`` then holds the nodes that reach ``seed``.
+
+    Two regimes, split by the broadcast threshold Spark already compares
+    the edges with.  When the edges fit it (``_driver_edges``), the walk
+    runs on the driver and returns one local DataFrame: a seeded walk keeps
+    a node set, an unbound one a pair set while that stays within the same
+    ``cap`` rows.  Above the threshold, or when the unbound pairs outgrow
+    ``cap``, the Spark loop ``_closure_steps`` runs."""
+    spark = base.sparkSession
+    walk = _driver_edges(base, backward)
+    if walk is not None:
+        adj, cap = walk
+        if seed is not None:
+            return spark.createDataFrame(
+                [(n,) for n in _reach(adj, seed)], "b long")
+        pairs: list[tuple[int, int]] = []
+        for a in adj:
+            pairs.extend((a, b) for b in _reach(adj, a))
+            if len(pairs) > cap:
+                break
+        else:
+            return spark.createDataFrame(pairs, "a long, b long")
+    return _closure_steps(base, seed, backward)
+
+
+def _closure_steps(base: DataFrame, seed: int | None = None,
+                   backward: bool = False) -> DataFrame:
+    """``closure`` as a semi-naive Spark loop, for edge relations above the
+    broadcast threshold.  A seeded walk is a BFS whose frontier stays
+    result-sized.
 
     Generation 0 is the edge set (or the seed's out-edges); each step derives
     the next generation from the last one only (``closure_step``).  A step
@@ -1214,17 +1292,23 @@ def _path_rel(kg: KG, s: str, marker, o: str) -> DataFrame:
 def _path_hit(kg: KG, s: str, marker, o: str) -> bool:
     """Both endpoints bound: an existence probe on ids, never translated.
     The zero-length arm hits when ``s == o`` is a graph node; ``p?`` probes
-    the edge relation for the pair, a closure runs a BFS from ``s``
-    (``closure``) and probes its result for ``o``."""
+    the edge relation for the pair.  A closure whose edges fit the broadcast
+    threshold walks them on the driver from ``s`` and stops once it reaches
+    ``o``; above it the Spark loop runs a BFS from ``s`` and probes its
+    result for ``o``."""
     base, nodes = _path_edges(kg, s, marker, o)
     if isinstance(marker, (StarPath, OptPath)) and s == o and s in nodes:
         return True
     if base is None:
         return False
     sid, oid = nodes[s], nodes[o]
-    hit = (base.filter((F.col("a") == sid) & (F.col("b") == oid))
-           if isinstance(marker, OptPath)
-           else closure(base, seed=sid).filter(F.col("b") == oid))
+    if isinstance(marker, OptPath):
+        hit = base.filter((F.col("a") == sid) & (F.col("b") == oid))
+    else:
+        walk = _driver_edges(base)
+        if walk is not None:
+            return oid in _reach(walk[0], sid, stop=oid)
+        hit = _closure_steps(base, seed=sid).filter(F.col("b") == oid)
     return hit.limit(1).count() > 0
 
 

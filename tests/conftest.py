@@ -62,3 +62,31 @@ def run_cli(spark, monkeypatch):
     monkeypatch.setattr(sess, "get_spark", lambda **kw: spark)
     monkeypatch.setattr(spark, "stop", lambda: None)
     return cli.main
+
+
+@pytest.fixture
+def spark_loop(spark):
+    """The broadcast threshold at -1 for one test, unset afterwards: every
+    path closure then runs the Spark semi-naive loop, not the driver walk
+    its edges would get below the threshold."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.unset(key)
+
+
+@pytest.fixture
+def job_ids(spark):
+    """``job_ids(group, fn)``: the Spark jobs ``fn`` runs, collected under
+    their own job group (broadcasts and adaptive stages run on Spark's
+    threads but inherit the group)."""
+    sc = spark.sparkContext
+
+    def run(group: str, fn) -> list[int]:
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+    return run

@@ -290,26 +290,13 @@ def test_closure_step_broadcasts_accumulator(spark, kg, tmp_path):
                for l in simple.splitlines()), simple
 
 
-def _job_ids(spark, group: str, fn) -> list[int]:
-    """The Spark jobs ``fn`` runs, collected under their own job group
-    (broadcasts and adaptive stages run on Spark's threads but inherit the
-    group)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return sc.statusTracker().getJobIdsForGroup(group)
-
-
-def test_unbound_closure_runs_one_action_per_step(spark, kg, golden_rows):
-    """An unbound ``p+`` over the golden KG's ``prev`` chains runs one Spark
-    action per semi-naive step plus a constant (the lookup, the final
-    count).  Spark names the final stage of an action's job after its call
-    site; broadcasts and adaptive shuffle stages run as extra jobs on
-    Spark's own threads, named after those, and belong to the action that
-    needs them."""
+def _closure_actions(spark, kg, golden_rows, job_ids,
+                     group: str) -> tuple[list, int]:
+    """The Spark actions a warm unbound ``p+`` over the golden KG's ``prev``
+    chains runs, and the semi-naive steps its Spark loop needs.  Spark names
+    the final stage of an action's job after its call site; broadcasts and
+    adaptive shuffle stages run as extra jobs on Spark's own threads, named
+    after those, and belong to the action that needs them."""
     from collections import Counter
 
     from hdtspark import rules, sparql_parser
@@ -319,18 +306,39 @@ def test_unbound_closure_runs_one_action_per_step(spark, kg, golden_rows):
     q = f"SELECT ?a ?b {{ ?a <{rules.P_PREV}>+ ?b }}"
     sparql_parser.query_df(kg, q).count()    # warm the cached projections
 
-    jobs = _job_ids(spark, "test-closure-actions",
-                    lambda: sparql_parser.query_df(kg, q).count())
+    jobs = job_ids(group, lambda: sparql_parser.query_df(kg, q).count())
     st = spark.sparkContext.statusTracker()
     # a job's own final stage has its highest stage id (parents, including
     # reused stages named after older call sites, are created first)
     finals = [st.getStageInfo(max(st.getJobInfo(j).stageIds)).name
               for j in jobs]
-    actions = [n for n in finals if "withThreadLocalCaptured" not in n]
-    assert steps <= len(actions) <= steps + 3, (actions, steps, len(jobs))
+    return [n for n in finals if "withThreadLocalCaptured" not in n], steps
 
 
-def test_query_paths_job_counts(spark, transcripts, golden_oracle, tmp_path):
+def test_unbound_closure_runs_one_action_per_step(spark, kg, golden_rows,
+                                                  job_ids, spark_loop):
+    """Above the broadcast threshold (here: at -1) an unbound ``p+`` runs
+    the Spark loop: one action per semi-naive step plus a constant (the
+    lookup, the final count)."""
+    actions, steps = _closure_actions(spark, kg, golden_rows, job_ids,
+                                      "test-closure-spark-loop")
+    assert steps <= len(actions) <= steps + 3, (actions, steps)
+
+
+def test_unbound_closure_driver_walk_runs_constant_actions(
+        spark, kg, golden_rows, job_ids):
+    """Below the threshold the same query walks the collected edges on the
+    driver: a fixed number of actions however deep the chains are, the
+    lookup and the edge collect (on this in-memory KG the collect re-runs
+    the PSO range exchange, whose sample and map stage are jobs of the same
+    call site)."""
+    actions, steps = _closure_actions(spark, kg, golden_rows, job_ids,
+                                      "test-closure-driver-walk")
+    assert len(actions) <= 4 < steps, (actions, steps)
+
+
+def test_query_paths_job_counts(spark, transcripts, golden_oracle, tmp_path,
+                                job_ids):
     """Spark jobs per query over the golden warehouse (the KG ``cli query``
     serves: parquet projections, no cached string enumeration), counted
     warm, so a change that adds a round trip shows: a bound pattern runs
@@ -341,12 +349,14 @@ def test_query_paths_job_counts(spark, transcripts, golden_oracle, tmp_path):
     share one broadcast node table; a negated set with a bound endpoint
     resolves its endpoint and excluded predicates in ONE lookup job; a BGP
     or a path with an absent constant is a zero-row relation and runs only
-    its lookup."""
+    its lookup; a ``p+`` whose edges fit the broadcast threshold runs its
+    lookup, ONE edge collect and the jobs of its answer, whatever its
+    depth, and a both-bound ASK walks the edges on the driver."""
     from hdtspark import checkpoint, query, rules, sparql, synth
 
     kg, _ = checkpoint.materialize_kg(spark, transcripts, str(tmp_path / "wh"))
     cv = synth.conv_id_for(7)
-    turn = rules.turn_iri(cv, 0)
+    turn, last = rules.turn_iri(cv, 0), rules.turn_iri(cv, 2)
     (_, _, role), = golden_oracle.pattern(turn, rules.P_ROLE, None)
 
     def pattern(s=None, p=None, o=None):
@@ -371,14 +381,20 @@ def test_query_paths_job_counts(spark, transcripts, golden_oracle, tmp_path):
             ("?t", "http://ex.org/p/absent", "?x")]), 1),
         "path-absent": (lambda: sparql.query(
             kg, "SELECT ?a ?b { ?a <http://ex.org/p/absent>+ ?b }"), 1),
+        "path-bound": (lambda: sparql.query(
+            kg, f"SELECT ?x {{ <{last}> <{rules.P_PREV}>+ ?x }}"), 4),
+        "path-unbound": (lambda: sparql.query(
+            kg, f"SELECT ?a ?b {{ ?a <{rules.P_PREV}>+ ?b }}"), 4),
+        "path-ask": (lambda: sparql.query(
+            kg, f"ASK {{ <{last}> <{rules.P_PREV}>+ <{turn}> }}"), 4),
     }
     got = {}
     for name, (q, _) in cases.items():
         # a warm-up run, which also checks that only the absent cases are
         # empty
         assert bool(q().collect()) == ("absent" not in name), name
-        got[name] = len(_job_ids(spark, f"test-jobs-{name}",
-                                 lambda: q().collect()))
+        got[name] = len(job_ids(f"test-jobs-{name}",
+                                lambda: q().collect()))
     assert got == {k: w for k, (_, w) in cases.items()}, got
 
 
@@ -393,7 +409,7 @@ def test_materialized_ops_scan_pushes_filters(spark, kg, tmp_path):
     assert "ReadSchema: struct<o:bigint,p:bigint,s:bigint>" in plan, plan
 
 
-def test_durable_build_job_count(spark, transcripts, tmp_path):
+def test_durable_build_job_count(spark, transcripts, tmp_path, job_ids):
     """A golden durable build into a fresh warehouse runs a fixed number of
     Spark jobs, counted under a job group; a change that adds a round trip
     to the build (or a stage that recomputes what the manifests know)
@@ -401,8 +417,8 @@ def test_durable_build_job_count(spark, transcripts, tmp_path):
     from hdtspark import checkpoint
 
     wh = str(tmp_path / "wh")
-    jobs = _job_ids(spark, "test-durable-build",
-                    lambda: checkpoint.materialize_kg(spark, transcripts, wh))
+    jobs = job_ids("test-durable-build",
+                   lambda: checkpoint.materialize_kg(spark, transcripts, wh))
     # the metrics stage writes the dictionary's VOID counts and runs no
     # aggregation of its own
     assert len(jobs) == 35, len(jobs)

@@ -3,7 +3,13 @@ finished stages are skipped, upstream changes invalidate downstream."""
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
+import signal
+import subprocess
+import sys
+import time
 
 from hdtspark import checkpoint, synth
 
@@ -55,6 +61,72 @@ def test_partial_failure_resume(spark, transcripts, tmp_path):
     assert skipped["triples_str"] and skipped["dict"]
     assert not skipped["spo"]
     assert _spo_set(kg2) == expected
+
+
+# A durable build of a transcripts parquet dir (argv[1]) into a warehouse
+# (argv[2]), run as a child process with the test session's shuffle
+# partitions.
+_BUILD = """
+import sys
+from hdtspark import checkpoint
+from hdtspark.session import get_spark
+spark = get_spark(app_name="kill-mid-stage", master="local[2]",
+                  shuffle_partitions=8,
+                  extra_conf={"spark.driver.memory": "1g"})
+checkpoint.materialize_kg(spark, spark.read.parquet(sys.argv[1]), sys.argv[2])
+"""
+
+
+def _part_files(stage_tmp: str) -> bool:
+    """Whether a stage's temp dir holds parquet part files (committed or
+    still under the writer's ``_temporary``) and no manifest yet."""
+    if os.path.exists(os.path.join(stage_tmp, checkpoint.MANIFEST)):
+        return False
+    return any(f.startswith("part-") for _, _, files in
+               os.walk(os.path.join(stage_tmp, "data")) for f in files)
+
+
+def test_kill_mid_stage_resumes(spark, transcripts, tmp_path):
+    """SIGKILL a durable golden build (its driver and JVM) while
+    ``spo.tmp/data`` holds part files but no manifest, then resume
+    in-process: the finished stages are served,
+    every content fingerprint equals an uninterrupted build's, and no temp
+    dir is left."""
+    src, wh = str(tmp_path / "transcripts"), str(tmp_path / "wh")
+    log = tmp_path / "build.log"
+    transcripts.write.parquet(src)
+    env = dict(os.environ, HDTSPARK_LOCAL_DIR=str(tmp_path / "local"),
+               PYTHONPATH=os.pathsep.join(sys.path))
+    with open(log, "w") as out:
+        child = subprocess.Popen(
+            [sys.executable, "-c", _BUILD, src, wh],
+            stdout=out, stderr=subprocess.STDOUT, env=env,
+            start_new_session=True)
+    try:
+        deadline = time.monotonic() + 600
+        while not _part_files(os.path.join(wh, "spo.tmp")):
+            assert child.poll() is None, log.read_text()[-3000:]
+            assert time.monotonic() < deadline, "spo never started"
+            time.sleep(0.005)
+        os.killpg(child.pid, signal.SIGKILL)
+    finally:
+        if child.poll() is None:
+            os.killpg(child.pid, signal.SIGKILL)
+        child.wait()
+    assert child.returncode == -signal.SIGKILL
+    assert [s for s in checkpoint.STAGES
+            if os.path.exists(os.path.join(wh, s))] == ["triples_str", "dict"]
+
+    _, mat = checkpoint.materialize_kg(spark, transcripts, wh)
+    assert [r.name for r in mat.results if r.skipped] == [
+        "triples_str", "dict"]
+    _, ref = checkpoint.materialize_kg(spark, transcripts,
+                                       str(tmp_path / "ref"))
+    assert {s: mat.read_manifest(s)["content_fingerprint"]
+            for s in checkpoint.STAGES} == {
+        s: ref.read_manifest(s)["content_fingerprint"]
+        for s in checkpoint.STAGES}
+    assert glob.glob(os.path.join(wh, "*.tmp")) == []
 
 
 def test_input_change_invalidates(spark, tmp_path):
